@@ -506,7 +506,7 @@ object SparkEntry {
     // same result through the two-stage block-max pruned path (§2.7 O3)
     "bm25_topk_wand" -> ((s, dir) => {
       val index = indexFor(s, dir)
-      Bm25Search.searchWand(flagshipQueriesDf(s), index, 10)
+      Bm25Search.searchPersistedWand(flagshipQueriesDf(s), index, 10)
         .select(col("qid"), col("doc_id"), col("rank"),
           round(col("score"), 4).as("score"))
     }),

@@ -57,11 +57,10 @@ object WandRegime {
     val tWand = pairsT.map(_._2).min
 
     // decode-volume evidence: blocks/postings each path physically decodes
-    val qterms = Bm25Search.compileQueriesLocal(mixed, index.termStats)
-    val ids = qterms.select(col("term_id")).distinct().as[Long].collect().toSeq
-    val probed = index.blocks.filter(col("term_id").isin(ids: _*))
+    val batch = Bm25Search.localBatch(Bm25Search.compileQueriesLocal(mixed, index.termStats))
+    val probed = Bm25Search.probe(batch, index)
     val cand = Bm25Search.wandCandidateBlocks(
-      qterms, probed, index, k, graft.index.Bm25Params())
+      batch, probed, index, k, graft.index.Bm25Params())
     val candNos = cand.select(col("block_no")).distinct()
     val (bFull, pFull) = probed.agg(count(lit(1)), sum(col("n"))).as[(Long, Long)].head()
     val (bWand, pWand) = probed.join(candNos, Seq("block_no"), "left_semi")

@@ -1,6 +1,6 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -15,7 +15,45 @@ import graft.index.{Bm25Index, Bm25Params}
   * The per-query Python loop (searcher.py:80-125) becomes ONE Spark job
   * over the whole query set: queries are tiny → broadcast side of every
   * join; postings are the big fact table and are only ever scanned with
-  * a pushed-down semi-join on term.
+  * a pushed-down term probe.
+  *
+  * Every search is one chain of layers, each written once:
+  *
+  *  1. compile — (qid, text) → a [[Batch]] of (qid, term, qtf, term_id,
+  *     idf, df) rows: [[compileQueries]] (distributed), or on the driver
+  *     through a dictionary lookup ([[compile]] for driver-sized batches,
+  *     [[compileQueriesLocal]] unconditionally; a [[SearchSession]]
+  *     passes its term cache as the lookup).
+  *  2. probe + decode — [[probe]] the batch's term ids, then
+  *     [[Bm25IndexTables.decode]]. How the batch was compiled picks the
+  *     probe and the corpus stats: a driver batch pushes an In-filter and
+  *     reads `corpusStatsLocal`, a distributed one semi-joins and keeps
+  *     the lazy `corpusStats`.
+  *  3. partial — [[hits]]: qtf·idf·tfNorm per (qid, term, doc), the
+  *     expression [[partial]].
+  *  4. reduce — [[scores]] (canonical term-order sum, via
+  *     [[termOrdered]]) or [[fliprScores]] (top-terms sum).
+  *  5. rank — [[topK]] (heap) or [[topKWindow]] (window reference).
+  *
+  * Entry points, as compositions of those layers:
+  *
+  *  - [[searchFull]]: compileQueries → probe → partial → scores → topK;
+  *    [[searchFullWindow]] the same with topKWindow.
+  *  - [[searchPersisted]]: compile → probe → partial → scores → topK;
+  *    [[searchPersistedCompiled]] starts from a driver-compiled frame.
+  *  - [[searchPersistedWand]]: compile, then per qid either the same
+  *    chain or block-max WAND ([[searchWandCompiled]]: bound stages over
+  *    block metadata, then probe → partial → scores → topK over the
+  *    surviving blocks).
+  *  - [[searchFlipr]]: compileQueries → probe → partial → fliprScores →
+  *    topK; [[searchRestricted]]: compileQueries → probe → doc
+  *    semi-join → partial → scores → topK.
+  *  - [[searchPhrase]]: compile → probe → partial over rarest-term
+  *    candidates → term-order sum with a conjunctive gate → text verify
+  *    → topK. [[searchExtractions]]: compileQueries + the partial
+  *    expression over the ranked docs' re-tokenized text.
+  *  - Training's scorers: [[hitsFor]] (compile → probe → doc semi-join
+  *    → partial), then scores or fliprScores.
   */
 object Bm25Search {
 
@@ -32,13 +70,43 @@ object Bm25Search {
     * free to shuffle the verify join instead. */
   private val PhraseBroadcastMaxCandidates = 1L << 21
 
-  /** (qid, text) → (qid, term, qtf, idf): tokenize ≤32 terms (reference
-    * query_maxlen, settings.py:139), count query-term multiplicity, attach
-    * idf. Unknown terms drop out via the inner join (they cannot score). */
+  /** Largest query batch the driver compile ([[compile]]) accepts before
+    * falling back to the fully distributed plan: the compile collects the
+    * batch to the driver — bounded metadata at serving/interactive sizes,
+    * but a 10^6-query analytics batch must not serialize through the
+    * driver, and an In list of millions of term ids would defeat the scan
+    * pushdown it exists to enable. */
+  val MaxDriverCompileQueries = 4096
+
+  // ---- layer 1: compile -------------------------------------------------
+
+  /** One compiled query term: (qid, term, qtf, term_id, idf, df). */
+  private[graft] type QTerm = (Long, String, Int, Long, Double, Long)
+
+  /** Dictionary lookup for a driver compile: term → (term_id, idf, df)
+    * for the given terms; unknown terms are absent. */
+  private[graft] type Lookup = Seq[String] => Map[String, (Long, Double, Long)]
+
+  /** A compiled query batch: its (qid, term, qtf, term_id, idf, df)
+    * rows as a frame. */
+  private[graft] sealed trait Batch { def qterms: DataFrame }
+
+  /** Compiled on the driver: `qterms` is the LocalRelation of `rows`, so
+    * every plan built from it reads literal rows instead of re-planning a
+    * dictionary join per consuming action. */
+  private[graft] final case class LocalBatch(qterms: DataFrame, rows: Seq[QTerm]) extends Batch
+
+  /** Compiled by the distributed tokenize → groupBy → dictionary-join plan. */
+  private[graft] final case class DistributedBatch(qterms: DataFrame) extends Batch
+
+  /** (qid, text) → (qid, term, qtf, term_id, idf, df): tokenize ≤32 terms
+    * (reference query_maxlen, settings.py:139), count query-term
+    * multiplicity, attach idf. Unknown terms drop out via the inner join
+    * (they cannot score). */
   def compileQueries(queries: DataFrame, termStats: DataFrame): DataFrame =
     queries
       // null qid/text rows cannot produce a ranking row; dropping them
-      // here keeps the distributed plan aligned with the driver fast lane
+      // here keeps the distributed plan aligned with the driver compile
       // (whose primitive decode could not represent a null qid anyway)
       .filter(col("qid").isNotNull && col("text").isNotNull)
       .select(col("qid"), explode(Tokenizer.tokenizeQuery(col("text"))).as("term"))
@@ -46,45 +114,201 @@ object Bm25Search {
       .agg(count(lit(1)).cast("int").as("qtf"))
       .join(termStats.select(col("term"), col("term_id"), col("idf"), col("df")), "term")
 
-  /** [[compileQueries]] with the serving-path fast lane: a driver-sized
-    * batch (≤ [[MaxDriverCompileQueries]]) compiles on the driver into a
-    * LocalRelation — one dictionary lookup job instead of a
-    * tokenize→groupBy→join stage chain per downstream reference (the
-    * same routing [[searchPersisted]] uses); larger batches keep the
-    * fully distributed plan. Identical rows either way. */
-  def compileQueriesAuto(queries: DataFrame, termStats: DataFrame): DataFrame =
+  /** Compile a driver-sized batch (≤ [[MaxDriverCompileQueries]]) on the
+    * driver through `lookup`; larger batches keep the distributed
+    * [[compileQueries]] plan. Identical rows either way. */
+  private[graft] def compile(queries: DataFrame, termStats: DataFrame, lookup: Lookup): Batch =
     collectBatch(queries) match {
-      case Some(rows) =>
-        compileRowsLocal(queries.sparkSession, tokenizeRows(rows), termStats)
-      case None => compileQueries(queries, termStats)
+      case Some(rows) => local(queries.sparkSession, compileRows(rows, lookup))
+      case None => DistributedBatch(compileQueries(queries, termStats))
     }
+
+  /** Compile a query batch on the DRIVER into a LocalRelation: tokenize
+    * driver-side, resolve the batch's distinct terms with ONE dictionary
+    * job, and return the ≤32·|queries| compiled rows (bounded metadata,
+    * not data) as literal rows. Every downstream plan then builds its
+    * qterms broadcasts from the LocalRelation for free — without this,
+    * each per-query plan re-scans termStats two or three times just to
+    * rebuild the same tiny broadcast (the 32-core serving regression:
+    * 3 dictionary jobs × 32 tasks of scheduling overhead per single
+    * query). The reference equivalently resolves query tokens against its
+    * in-memory vocab map once per query (searcher.py:80-95). */
+  def compileQueriesLocal(queries: DataFrame, termStats: DataFrame): DataFrame = {
+    val rows = queryRows(queries).collect()
+    require(rows.forall(_._1.isDefined),
+      "driver-side query compile needs long-castable qids; route string-qid " +
+        "batches through the distributed compileQueries instead")
+    local(queries.sparkSession,
+      compileRows(rows.map { case (q, t) => (q.get, t) }.toSeq, lookupTerms(termStats))).qterms
+  }
+
+  /** The driver compile: (qid, text) rows → compiled rows, resolving the
+    * distinct terms through `lookup`. */
+  private def compileRows(rows: Seq[(Long, String)], lookup: Lookup): Seq[QTerm] = {
+    val counts = tokenizeRows(rows)
+    val dict = lookup(counts.map(_._2).distinct)
+    counts.flatMap { case (qid, t, qtf) =>
+      dict.get(t).map { case (id, idf, df) => (qid, t, qtf, id, idf, df) }
+    }
+  }
+
+  /** Compiled rows as a [[LocalBatch]]. */
+  private def local(spark: SparkSession, rows: Seq[QTerm]): LocalBatch = {
+    import spark.implicits._
+    LocalBatch(rows.toDF("qid", "term", "qtf", "term_id", "idf", "df"), rows)
+  }
+
+  /** A driver-compiled qterms frame as a [[LocalBatch]] (collecting a
+    * LocalRelation runs no job). */
+  private[graft] def localBatch(qterms: DataFrame): LocalBatch = {
+    val spark = qterms.sparkSession
+    import spark.implicits._
+    LocalBatch(qterms, qterms.select(col("qid"), col("term"), col("qtf"), col("term_id"),
+      col("idf"), col("df")).as[QTerm].collect().toSeq)
+  }
+
+  /** (term → (term_id, idf, df)) for the given terms — ONE isin-filtered
+    * job over the dictionary (row-group/batch stats prune the scan). */
+  private[graft] def lookupTerms(termStats: DataFrame): Lookup = terms =>
+    if (terms.isEmpty) Map.empty
+    else termStats.filter(col("term").isin(terms: _*))
+      .select(col("term"), col("term_id"), col("idf"), col("df"))
+      .collect()
+      .map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2), r.getLong(3)))).toMap
+
+  /** Non-null (qid, text) rows with the qid cast to long (None when it
+    * does not cast) — the same null-row dropping as [[compileQueries]]. */
+  private def queryRows(queries: DataFrame): Dataset[(Option[Long], String)] = {
+    val spark = queries.sparkSession
+    import spark.implicits._
+    queries.filter(col("qid").isNotNull && col("text").isNotNull)
+      .select(col("qid").cast("long"), col("text"))
+      .as[(Option[Long], String)]
+  }
+
+  /** The batch's (qid, text) rows if it is driver-compile sized, else
+    * None — ONE limit-pushed job either way. `cap` is overridable only so
+    * tests can exercise the fallback without a 4096-query fixture. */
+  private[query] def collectBatch(queries: DataFrame,
+                                  cap: Int = MaxDriverCompileQueries): Option[Seq[(Long, String)]] = {
+    val rows = queryRows(queries).limit(cap + 1).collect()
+    // a non-null qid that does not CAST to long (string ids) can only be
+    // grouped by the distributed plan — fall back rather than drop it
+    if (rows.length > cap || rows.exists(_._1.isEmpty)) None
+    else Some(rows.map { case (q, t) => (q.get, t) }.toSeq)
+  }
+
+  /** Driver-side (qid, term, qtf) triples via the SAME scanner the
+    * Catalyst expression calls (property-tested identical). Multiplicity
+    * is counted across ALL of a qid's rows (a duplicated qid contributes
+    * one merged group, exactly like the distributed groupBy(qid, term));
+    * null texts drop like explode(tokenize(null)) does. Output order is
+    * deterministic — the triples become LocalRelation literals. */
+  private def tokenizeRows(rows: Seq[(Long, String)]): Seq[(Long, String, Int)] =
+    rows.flatMap { case (qid, text) =>
+        Option(Tokenizer.tokenize(text, Tokenizer.QueryMaxTerms))
+          .fold(Seq.empty[(Long, String)])(_.toSeq.map(t => (qid, t)))
+      }
+      .groupBy(identity).toSeq
+      .map { case ((qid, t), occ) => (qid, t, occ.size) }
+      .sortBy { case (qid, t, _) => (qid, t) }
+
+  // ---- layer 2: probe (+ decode) ----------------------------------------
+
+  /** Posting blocks of the batch's terms. A driver batch pushes its
+    * distinct term ids as an In-filter into the scan: the blocks table is
+    * written sorted by term_id, so row-group min/max stats skip nearly
+    * every non-probed row group — the physical analog of the reference's
+    * IVF lookup touching only probed centroids
+    * (colbert/search/candidate_generation.py:22-37). (A semi-join against
+    * `qterms.distinct()` would be an Aggregate over a LocalRelation that
+    * Catalyst cannot collapse: a 2-row shuffle + broadcast build per
+    * consuming action.) A distributed batch semi-joins its broadcast term
+    * ids instead — its term set is not known until the plan runs. */
+  private[graft] def probe(b: Batch, index: Bm25IndexTables): DataFrame = b match {
+    case LocalBatch(_, rows) => index.probeBlocks(rows.map(_._4).distinct)
+    case DistributedBatch(qterms) =>
+      index.blocks.join(broadcast(qterms.select(col("term_id")).distinct()), "term_id")
+  }
+
+  /** The corpus stats a batch scores against: a driver batch already ran
+    * jobs to compile, so it takes the one-row LocalRelation; a
+    * distributed plan keeps the lazy subtree so building it stays
+    * action-free. */
+  private def corpusStatsOf(b: Batch, index: Bm25IndexTables): DataFrame = b match {
+    case _: LocalBatch => index.corpusStatsLocal
+    case _: DistributedBatch => index.corpusStats
+  }
+
+  // ---- layer 3: partial -------------------------------------------------
+
+  /** The BM25 partial of one (query term, doc) pair: qtf·idf·tfNorm. */
+  private def partial(p: Bm25Params): Column =
+    (col("qtf") * col("idf") *
+      Bm25Index.tfNorm(col("tf"), col("dl"), col("avgdl"), p)).as("partial")
 
   /** Score hits: compiled query terms ⋈ decoded postings on term.
     * The query side is broadcast (J1 in SURVEY §2.4 — the IVF probe). */
-  def hits(qterms: DataFrame, postingsWithDl: DataFrame, corpusStats: DataFrame,
-           p: Bm25Params = Bm25Params()): DataFrame =
+  private[graft] def hits(qterms: DataFrame, postingsWithDl: DataFrame, corpusStats: DataFrame,
+                          p: Bm25Params): DataFrame =
     postingsWithDl
       .join(broadcast(qterms.drop("term")), "term_id")
       .crossJoin(broadcast(corpusStats))
-      .select(
-        col("qid"),
-        col("term_id"),
-        col("doc_id"),
-        (col("qtf") * col("idf") *
-          Bm25Index.tfNorm(col("tf"), col("dl"), col("avgdl"), p)).as("partial"))
+      .select(col("qid"), col("term_id"), col("doc_id"), partial(p))
 
-  /** Deterministic per-(qid,doc) score: partials summed in canonical term
-    * order (sort_array + aggregate HOF) so the double sum is bit-identical
-    * at local[8] ≡ local[32] ≡ any cluster layout (SURVEY §7.4 risk 1).
-    * ≤32 terms per doc → O(1) per row. */
-  def scores(hits: DataFrame): DataFrame =
+  /** probe → decode (→ semi-join to `docs`) → partials of a batch. */
+  private def batchHits(b: Batch, index: Bm25IndexTables, p: Bm25Params,
+                        docs: Option[DataFrame] = None): DataFrame = {
+    val decoded = index.decode(probe(b, index))
+    hits(b.qterms, docs.fold(decoded)(decoded.join(_, Seq("doc_id"), "left_semi")),
+      corpusStatsOf(b, index), p)
+  }
+
+  /** The partials of `queries` against just the (doc_id) rows of `docs`
+    * — the training scorers' input. Training batches are bounded by
+    * construction, so they compile on the driver. */
+  private[graft] def hitsFor(queries: DataFrame, docs: DataFrame, index: Bm25IndexTables,
+                             p: Bm25Params): DataFrame =
+    batchHits(compile(queries, index.termStats, lookupTerms(index.termStats)), index, p, Some(docs))
+
+  // ---- layer 4: reduce --------------------------------------------------
+
+  /** Partials grouped per (qid, `key`) into `ps`, sorted by term_id: the
+    * canonical order every score sum folds in (sort_array normalizes the
+    * collect_list order), so the double sum is bit-identical at
+    * local[8] ≡ local[32] ≡ any cluster layout (SURVEY §7.4 risk 1).
+    * ≤32 terms per group → O(1) per row. */
+  private def termOrdered(partials: DataFrame, key: String): DataFrame =
+    partials.groupBy(col("qid"), col(key))
+      .agg(sort_array(collect_list(struct(col("term_id"), col("partial")))).as("ps"))
+
+  /** The left-to-right sum of a [[termOrdered]] `ps` array. */
+  private def termOrderSum: Column = expr("aggregate(ps, 0d, (acc, x) -> acc + x.partial)")
+
+  /** Deterministic per-(qid, doc) score: partials summed in canonical
+    * term order. */
+  private[graft] def scores(hits: DataFrame): DataFrame =
+    termOrdered(hits, "doc_id")
+      .select(col("qid"), col("doc_id"), termOrderSum.as("score"))
+
+  /** FLIPR-analog reduce (reference's experimental flipr reduce sums only
+    * the top-K1 per-token maxima instead of all of them,
+    * colbert/modeling/colbert.py:172-185): per (qid, doc) the score is the
+    * sum of the `topTerms` LARGEST partials, so one dominant term cannot
+    * be diluted by many weak ones. Partials are desc-sorted before the
+    * bounded sum (sort_array normalizes the collect_list order →
+    * bit-stable at any parallelism; equal partials sum identically
+    * whichever side of the cut they land on). */
+  private[graft] def fliprScores(hits: DataFrame, topTerms: Int): DataFrame =
     hits
       .groupBy(col("qid"), col("doc_id"))
-      .agg(sort_array(collect_list(struct(col("term_id"), col("partial")))).as("ps"))
-      .select(
-        col("qid"),
-        col("doc_id"),
-        expr("aggregate(ps, 0d, (acc, x) -> acc + x.partial)").as("score"))
+      .agg(sort_array(collect_list(struct(col("partial"), col("term_id"))),
+        asc = false).as("ps"))
+      .select(col("qid"), col("doc_id"),
+        expr(s"aggregate(slice(ps, 1, $topTerms), 0d, (acc, x) -> acc + x.partial)")
+          .as("score"))
+
+  // ---- layer 5: rank ----------------------------------------------------
 
   /** rank 1..k per qid, ordered by (score desc, doc_id asc) — the
     * reference's stable tiebreak (server.py:34 re-sorts (-score, pid)).
@@ -106,200 +330,104 @@ object Bm25Search {
       .filter(col("rank") <= k)
   }
 
-  /** Core search over an already-compiled qterms frame (qid, term, qtf,
-    * term_id, idf): probe blocks by the batch's distinct term ids, decode,
-    * score, top-k. */
-  private def searchCompiled(qterms: DataFrame, index: Bm25IndexTables, k: Int,
-                             p: Bm25Params): DataFrame = {
-    val decoded = index.decode(
-      index.blocks.join(broadcast(qterms.select(col("term_id")).distinct()), "term_id"))
-    topK(scores(hits(qterms, decoded, index.corpusStats, p)), k)
-  }
+  /** probe → partial → scores → topK over a compiled batch. */
+  private[query] def rank(b: Batch, index: Bm25IndexTables, k: Int, p: Bm25Params): DataFrame =
+    topK(scores(batchHits(b, index, p)), k)
 
-  /** Full (unpruned) exact top-k from the compressed index. */
+  // ---- entry points -----------------------------------------------------
+
+  /** Full (unpruned) exact top-k from the compressed index, through the
+    * fully distributed plan. */
   def searchFull(queries: DataFrame, index: Bm25IndexTables, k: Int,
                  p: Bm25Params = Bm25Params()): DataFrame =
-    searchCompiled(compileQueries(queries, index.termStats), index, k, p)
+    rank(DistributedBatch(compileQueries(queries, index.termStats)), index, k, p)
 
   /** [[searchFull]] with the window top-k — same rows, kept as the
     * explicit declarative variant the DuckDB oracle mirrors. */
   def searchFullWindow(queries: DataFrame, index: Bm25IndexTables, k: Int,
-                       p: Bm25Params = Bm25Params()): DataFrame = {
-    val qterms = compileQueries(queries, index.termStats)
-    val decoded = index.decode(
-      index.blocks.join(broadcast(qterms.select(col("term_id")).distinct()), "term_id"))
-    topKWindow(scores(hits(qterms, decoded, index.corpusStats, p)), k)
-  }
+                       p: Bm25Params = Bm25Params()): DataFrame =
+    topKWindow(scores(batchHits(
+      DistributedBatch(compileQueries(queries, index.termStats)), index, p)), k)
 
-  /** Historical alias for the heap-aggregated path (now the [[searchFull]]
-    * default). */
-  def searchFullAgg(queries: DataFrame, index: Bm25IndexTables, k: Int,
-                    p: Bm25Params = Bm25Params()): DataFrame =
-    searchFull(queries, index, k, p)
-
-  /** Largest query batch the driver-compiled paths ([[searchPersisted]],
-    * [[searchWand]]) accept before falling back to the fully distributed
-    * plan: the In-filter/route compile collects the batch to the driver —
-    * bounded metadata at serving/interactive sizes, but a 10^6-query
-    * analytics batch must not serialize through the driver, and an In
-    * list of millions of term ids would defeat the scan pushdown it
-    * exists to enable. */
-  val MaxDriverCompileQueries = 4096
-
-  /** The batch's (qid, text) rows if it is driver-compile sized, else
-    * None — ONE limit-pushed job either way. `cap` is overridable only so
-    * tests can exercise the fallback without a 4096-query fixture. */
-  private[query] def collectBatch(queries: DataFrame,
-                                  cap: Int = MaxDriverCompileQueries): Option[Seq[(Long, String)]] = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val rows = queries
-      // same null-row dropping as compileQueries (on the ORIGINAL columns
-      // — a null qid would NPE the primitive decode below)
-      .filter(col("qid").isNotNull && col("text").isNotNull)
-      .select(col("qid").cast("long"), col("text"))
-      .as[(Option[Long], String)].limit(cap + 1).collect()
-    // a non-null qid that does not CAST to long (string ids) can only be
-    // grouped by the distributed plan — fall back rather than drop it
-    if (rows.length > cap || rows.exists(_._1.isEmpty)) None
-    else Some(rows.map { case (q, t) => (q.get, t) }.toSeq)
-  }
-
-  /** Driver-side (qid, term, qtf) triples. Multiplicity is counted across
-    * ALL of a qid's rows (a duplicated qid contributes one merged group,
-    * exactly like the distributed groupBy(qid, term)); null texts drop
-    * like explode(tokenize(null)) does. Output order is deterministic —
-    * the triples become LocalRelation literals. */
-  private[query] def tokenizeRows(rows: Seq[(Long, String)]): Seq[(Long, String, Int)] =
-    rows.flatMap { case (qid, text) =>
-        Option(Tokenizer.tokenize(text, Tokenizer.QueryMaxTerms))
-          .fold(Seq.empty[(Long, String)])(_.toSeq.map(t => (qid, t)))
-      }
-      .groupBy(identity).toSeq
-      .map { case ((qid, t), occ) => (qid, t, occ.size) }
-      .sortBy { case (qid, t, _) => (qid, t) }
-
-  /** Driver-side tokenize + multiplicity count of a query batch:
-    * (qid, term, qtf) triples via the SAME scanner the Catalyst
-    * expression calls (property-tested identical) — zero Spark jobs. */
-  def tokenizeQueriesDriver(queries: DataFrame): Seq[(Long, String, Int)] = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val rows = queries
-      // null qid/text rows drop exactly like compileQueries' filter
-      .filter(col("qid").isNotNull && col("text").isNotNull)
-      .select(col("qid").cast("long"), col("text"))
-      .as[(Option[Long], String)].collect()
-    require(rows.forall(_._1.isDefined),
-      "driver-side query compile needs long-castable qids; route string-qid " +
-        "batches through the distributed compileQueries instead")
-    tokenizeRows(rows.map { case (q, t) => (q.get, t) }.toSeq)
-  }
-
-  /** (term → (term_id, idf, df)) for the given terms — ONE isin-filtered
-    * job over the dictionary (row-group/batch stats prune the scan). */
-  def lookupTerms(terms: Seq[String], termStats: DataFrame): Map[String, (Long, Double, Long)] =
-    if (terms.isEmpty) Map.empty
-    else termStats.filter(col("term").isin(terms: _*))
-      .select(col("term"), col("term_id"), col("idf"), col("df"))
-      .collect()
-      .map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2), r.getLong(3)))).toMap
-
-  /** Compile a query batch on the DRIVER into a LocalRelation: tokenize
-    * driver-side, resolve the batch's distinct terms with ONE dictionary
-    * job, and return the ≤32·|queries| compiled rows (bounded metadata,
-    * not data) as literal rows. Every downstream plan then builds its
-    * qterms broadcasts from the LocalRelation for free — without this,
-    * each per-query plan re-scans termStats two or three times just to
-    * rebuild the same tiny broadcast (the 32-core serving regression:
-    * 3 dictionary jobs × 32 tasks of scheduling overhead per single
-    * query). The reference equivalently resolves query tokens against its
-    * in-memory vocab map once per query (searcher.py:80-95). */
-  def compileQueriesLocal(queries: DataFrame, termStats: DataFrame): DataFrame =
-    compileRowsLocal(queries.sparkSession, tokenizeQueriesDriver(queries), termStats)
-
-  private def compileRowsLocal(spark: SparkSession,
-                               counts: Seq[(Long, String, Int)],
-                               termStats: DataFrame): DataFrame = {
-    import spark.implicits._
-    val dict = lookupTerms(counts.map(_._2).distinct, termStats)
-    counts.flatMap { case (qid, t, qtf) =>
-      dict.get(t).map { case (id, idf, df) => (qid, t, qtf, id, idf, df) }
-    }.toDF("qid", "term", "qtf", "term_id", "idf", "df")
-  }
-
-  /** IVF-probe with real I/O pruning for a PERSISTED index: compile the
-    * query batch at the driver ([[compileQueriesLocal]]) and push the
-    * distinct term ids as an In-filter into the parquet scan. The blocks
-    * table is written sorted by term_id, so row-group min/max stats skip
-    * nearly every non-probed row group — the physical analog of the
-    * reference's IVF lookup touching only probed centroids
-    * (colbert/search/candidate_generation.py:22-37). Returns the same rows
-    * as [[searchFull]] on the unfiltered index.
-    *
-    * Batches over [[MaxDriverCompileQueries]] fall back to the fully
-    * distributed [[searchFull]] plan (identical rows): a corpus-scale
-    * query batch must not serialize through the driver, and with that
-    * many distinct terms the In-filter would keep every row group
-    * anyway. */
+  /** IVF-probe with real I/O pruning for a PERSISTED index: a
+    * driver-sized batch compiles on the driver and pushes its term ids
+    * into the parquet scan ([[probe]]). Returns the same rows as
+    * [[searchFull]], which is also what batches over
+    * [[MaxDriverCompileQueries]] run (with that many distinct terms the
+    * In-filter would keep every row group anyway). */
   def searchPersisted(queries: DataFrame, index: Bm25IndexTables, k: Int,
                       p: Bm25Params = Bm25Params()): DataFrame =
-    collectBatch(queries) match {
-      case Some(rows) =>
-        searchPersistedCompiled(
-          compileRowsLocal(queries.sparkSession, tokenizeRows(rows), index.termStats),
-          index, k, p)
-      case None => searchFull(queries, index, k, p)
-    }
+    rank(compile(queries, index.termStats, lookupTerms(index.termStats)), index, k, p)
 
   /** [[searchPersisted]] from an already-compiled local qterms frame
-    * (serving sessions compile through their own term cache). The isin
-    * filter IS the term probe here — the semi-join searchCompiled adds on
-    * top would replan the same pruning as an Aggregate-over-LocalRelation
-    * (which Catalyst can't collapse), costing a 2-row shuffle + broadcast
-    * build per query. */
+    * ([[compileQueriesLocal]]). */
   def searchPersistedCompiled(qterms: DataFrame, index: Bm25IndexTables, k: Int,
-                              p: Bm25Params = Bm25Params()): DataFrame = {
-    val ids = qterms.select(col("term_id")).collect().map(_.getLong(0)).distinct.toSeq
-    val decoded = index.decode(index.probeBlocks(ids))
-    topK(scores(hits(qterms, decoded, index.corpusStatsLocal, p)), k)
-  }
+                              p: Bm25Params = Bm25Params()): DataFrame =
+    rank(localBatch(qterms), index, k, p)
 
-  /** WAND over a persisted index with the query-term In-filter pushed to
-    * the parquet scan (same I/O pruning as [[searchPersisted]], same
-    * results as [[searchWand]]). */
+  /** Two-stage block-max-WAND-style pruned search with the query-term
+    * In-filter pushed to the scan — exact results, reference analog of
+    * the staged pruning in index_storage.py:111-194:
+    *
+    * stage A (θ bound): exactly score only each query's highest-idf
+    *   term's postings, sampled from at most [[ThetaBlocks]] of its
+    *   blocks; the kth best such single-term score is a LOWER bound θ on
+    *   the true kth best full score (any doc-subset + term-subset scoring
+    *   can only under-estimate; fewer than k sampled docs → no θ → no
+    *   pruning, still exact).
+    * stage B (candidate BLOCKS): classic WAND term ordering — per qid,
+    *   terms are sorted by their maximum possible contribution
+    *   mc_t = qtf·idf_t·(k1+1) (tf-saturation is bounded by k1+1), and the
+    *   maximal ascending prefix with Σ mc < θ is the WEAK set: a doc whose
+    *   postings lie only in weak terms cannot reach θ, so weak terms'
+    *   postings are NEVER TRAVERSED. Upper bounds are then computed at
+    *   BLOCK granularity from block metadata alone (no decode):
+    *   ub(qid, block) = Σ_strong qtf·idf·block_max(term, block) + Σ_weak
+    *   mc bounds every doc of the block, because each doc lives in
+    *   exactly one block. Keep blocks with ub ≥ θ.
+    * stage C (exact): decode only surviving blocks (semi-join on
+    *   block_no — whole stopword posting ranges are skipped), score
+    *   exactly, drop (qid, block) pairs that did not survive for that
+    *   qid, top-k. Every true top-k doc survives: score ≤ its block's ub.
+    *
+    * At scale: stopword-grade terms are usually weak (huge df → small
+    * idf·(k1+1) vs θ from a rare term), so their 10^11-entry posting
+    * lists are read NEITHER for candidates NOR for exact scoring outside
+    * candidate block ranges — the degenerate O(postings) scan only
+    * remains for queries made exclusively of stopwords.
+    *
+    * Adaptive strategy choice per QUERY, decided from compile-time
+    * metadata alone: the bound stages can only pay off when at least one
+    * query term is BLOCK-SPARSE (present in well under half the doc-range
+    * blocks — a term with df ≥ #blocks has a posting in every block by
+    * pigeonhole, so nothing can be skipped and the multi-pass machinery
+    * is pure overhead). Each qid routes independently: sparse-term
+    * queries take the pruned path, dense/stopword-only queries the
+    * one-pass [[rank]] chain, and the union is exact either way (WAND ≡
+    * full is property-tested). Over [[MaxDriverCompileQueries]] the
+    * per-qid route can't run on the driver; the one-pass distributed plan
+    * returns identical rows, and at that many distinct terms the batch
+    * probes essentially every block, so pruning had nothing to win. */
   def searchPersistedWand(queries: DataFrame, index: Bm25IndexTables, k: Int,
                           p: Bm25Params = Bm25Params()): DataFrame =
-    collectBatch(queries) match {
-      case Some(rows) =>
-        routeWand(
-          compileRowsLocal(queries.sparkSession, tokenizeRows(rows), index.termStats),
-          index, k, p, persisted = true)
-      case None => searchFull(queries, index, k, p) // see searchWand
+    compile(queries, index.termStats, lookupTerms(index.termStats)) match {
+      case b @ LocalBatch(qterms, rows) =>
+        val nBlocks = math.max(1L, (index.docIdSpan + p.blockSpan - 1) / p.blockSpan)
+        val minDf = rows.groupBy(_._1).map { case (q, rs) => q -> rs.map(_._6).min }
+        val (wandRows, fullRows) = rows.partition(r => 2L * minDf(r._1) < nBlocks)
+        val spark = qterms.sparkSession
+        if (wandRows.isEmpty) rank(b, index, k, p)
+        else if (fullRows.isEmpty) searchWandCompiled(b, index, k, p)
+        else searchWandCompiled(local(spark, wandRows), index, k, p)
+          .unionByName(rank(local(spark, fullRows), index, k, p))
+      case b => rank(b, index, k, p)
     }
 
-  /** FLIPR-analog scoring (reference's experimental flipr reduce sums only
-    * the top-K1 per-token maxima instead of all of them,
-    * colbert/modeling/colbert.py:172-185): per (qid, doc) the score is the
-    * sum of the `topTerms` LARGEST per-term BM25 contributions, so one
-    * dominant term cannot be diluted by many weak ones. Contributions are
-    * desc-sorted before the bounded sum (sort_array normalizes the
-    * collect_list order → bit-stable at any parallelism; equal partials
-    * sum identically whichever side of the cut they land on). */
+  /** FLIPR-analog top-k ([[fliprScores]] over the full plan's partials). */
   def searchFlipr(queries: DataFrame, index: Bm25IndexTables, k: Int,
-                  topTerms: Int, p: Bm25Params = Bm25Params()): DataFrame = {
-    val qterms = compileQueries(queries, index.termStats)
-    val decoded = index.decode(
-      index.blocks.join(broadcast(qterms.select(col("term_id")).distinct()), "term_id"))
-    val flip = hits(qterms, decoded, index.corpusStats, p)
-      .groupBy(col("qid"), col("doc_id"))
-      .agg(sort_array(collect_list(struct(col("partial"), col("term_id"))),
-        asc = false).as("ps"))
-      .select(col("qid"), col("doc_id"),
-        expr(s"aggregate(slice(ps, 1, $topTerms), 0d, (acc, x) -> acc + x.partial)")
-          .as("score"))
-    topK(flip, k)
-  }
+                  topTerms: Int, p: Bm25Params = Bm25Params()): DataFrame =
+    topK(fliprScores(batchHits(
+      DistributedBatch(compileQueries(queries, index.termStats)), index, p), topTerms), k)
 
   /** Search restricted to an allowed docId set (reference pid filter /
     * restricted search, searcher.py:87-95, index_storage.py:91-101):
@@ -307,13 +435,9 @@ object Bm25Search {
     * semi-join applied before scoring, so disallowed postings never reach
     * the aggregation. */
   def searchRestricted(queries: DataFrame, index: Bm25IndexTables, k: Int,
-                       allowedDocs: DataFrame, p: Bm25Params = Bm25Params()): DataFrame = {
-    val qterms = compileQueries(queries, index.termStats)
-    val decoded = index.decode(
-      index.blocks.join(broadcast(qterms.select(col("term_id")).distinct()), "term_id"))
-      .join(allowedDocs.select(col("doc_id")), Seq("doc_id"), "left_semi")
-    topK(scores(hits(qterms, decoded, index.corpusStats, p)), k)
-  }
+                       allowedDocs: DataFrame, p: Bm25Params = Bm25Params()): DataFrame =
+    topK(scores(batchHits(DistributedBatch(compileQueries(queries, index.termStats)),
+      index, p, Some(allowedDocs.select(col("doc_id"))))), k)
 
   /** A view of the index with stopword-grade terms dropped: any term with
     * df > maxDfFraction·N is removed from termStats, so query compilation
@@ -397,8 +521,7 @@ object Bm25Search {
         col("fst.pos").as("token_pos"),
         col("fst.start").as("start_char"),
         col("fst.end").as("end_char"),
-        (col("qtf") * col("idf") *
-          Bm25Index.tfNorm(col("tf"), col("dl"), col("avgdl"), p)).as("partial"))
+        partial(p))
   }
 
   /** Exact PHRASE search: top-k docs containing the query tokens as a
@@ -436,21 +559,15 @@ object Bm25Search {
     import spark.implicits._
     // A driver-sized batch compiles ALL its per-qid metadata on the
     // driver — compiled terms, rarest term, conjunctive term count,
-    // adjacency pattern — into LocalRelations (the routeWand pattern):
-    // the distributed formulation spent ~2/3 of its wall on the stage
-    // chain (compile join, rarest window, qn groupBy, pattern dedup)
-    // over frames of ≤ batch-size rows. Larger batches keep the fully
-    // distributed plan; rows are identical either way.
-    val local = collectBatch(queries, driverCap)
-    val (qterms, rarest, nPerQ, ptoks, candBound) = local match {
+    // adjacency pattern — into LocalRelations: the distributed
+    // formulation spent ~2/3 of its wall on the stage chain (compile
+    // join, rarest window, qn groupBy, pattern dedup) over frames of
+    // ≤ batch-size rows. Larger batches keep the fully distributed plan;
+    // rows are identical either way.
+    val (batch, rarest, nPerQ, ptoks, candBound) = collectBatch(queries, driverCap) match {
       case Some(rows) =>
-        val counts = tokenizeRows(rows) // merged distinct (qid, term, qtf)
-        val dict = lookupTerms(counts.map(_._2).distinct, index.termStats)
-        val compiled = counts.flatMap { case (qid, t, qtf) =>
-          dict.get(t).map { case (id, idf, df) => (qid, t, qtf, id, idf, df) }
-        }
-        val qtermsDf = compiled.toDF("qid", "term", "qtf", "term_id", "idf", "df")
-        val perQidRarest = compiled.groupBy(_._1).values
+        val b = local(spark, compileRows(rows, lookupTerms(index.termStats)))
+        val perQidRarest = b.rows.groupBy(_._1).values
           .map(rs => rs.minBy(r => (r._6, r._4))).toSeq
         val rarestDf = perQidRarest.map(r => (r._1, r._4)).toDF("qid", "term_id")
         // Σ_q df(rarest): a DRIVER-known upper bound on the candidate set
@@ -458,9 +575,9 @@ object Bm25Search {
         // broadcast the survivors (metadata-only, no extra job)
         val bound = Some(perQidRarest.map(_._6).sum)
         // qn counts DISTINCT query tokens INCLUDING out-of-vocabulary
-        // ones (an OOV term must fail the conjunction) — counts is
-        // already one row per distinct (qid, term)
-        val nPerQDf = counts.groupBy(_._1).view.mapValues(_.size).toSeq
+        // ones (an OOV term must fail the conjunction) — tokenizeRows is
+        // one row per distinct (qid, term)
+        val nPerQDf = tokenizeRows(rows).groupBy(_._1).view.mapValues(_.size).toSeq
           .toDF("qid", "qn")
         // first text per qid in input order (one adjacency pattern each)
         val firstText = rows.foldLeft(Vector.empty[(Long, String)]) {
@@ -471,12 +588,12 @@ object Bm25Search {
           (qid, Option(Tokenizer.tokenize(t, Tokenizer.QueryMaxTerms))
             .map(_.toSeq).getOrElse(Seq.empty[String]))
         }.toDF("qid", "pt")
-        (qtermsDf, rarestDf, nPerQDf, ptoksDf, bound)
+        (b, rarestDf, nPerQDf, ptoksDf, bound)
       case None =>
-        val qtermsDf = compileQueries(queries, index.termStats)
+        val b = DistributedBatch(compileQueries(queries, index.termStats))
         val wMin = Window.partitionBy(col("qid"))
           .orderBy(col("df").asc, col("term_id").asc)
-        val rarestDf = qtermsDf
+        val rarestDf = b.qterms
           .withColumn("rn", row_number().over(wMin)).filter(col("rn") === 1)
           .select(col("qid"), col("term_id"))
         val nPerQDf = queries
@@ -490,10 +607,9 @@ object Bm25Search {
           .dropDuplicates("qid")
         // corpus-scale batch: no driver-side candidate bound exists, so
         // the verify join must not assume broadcastability
-        (qtermsDf, rarestDf, nPerQDf, ptoksDf, None)
+        (b, rarestDf, nPerQDf, ptoksDf, None)
     }
-    val decoded = index.decode(
-      index.blocks.join(broadcast(qterms.select(col("term_id")).distinct()), "term_id"))
+    val decoded = index.decode(probe(batch, index))
     // Rarest-term-driven candidates: a conjunction-passing doc must hold
     // EVERY phrase term, so only docs holding the qid's rarest (min-df)
     // term can qualify — the candidate set is bounded by Σ_q df(rarest),
@@ -509,25 +625,16 @@ object Bm25Search {
     // per-(qid, doc, term) rows are identical to hits() restricted to the
     // candidate docs, so scores and the conjunctive gate are unchanged
     val h = cand
-      .join(broadcast(qterms.drop("term")), "qid")
+      .join(broadcast(batch.qterms.drop("term")), "qid")
       .join(decoded.select(col("term_id"), col("doc_id"), col("tf"), col("dl")),
         Seq("term_id", "doc_id"))
-      .crossJoin(broadcast(index.corpusStats))
-      .select(
-        col("qid"),
-        col("term_id"),
-        col("doc_id"),
-        (col("qtf") * col("idf") *
-          Bm25Index.tfNorm(col("tf"), col("dl"), col("avgdl"), p)).as("partial"))
+      .crossJoin(broadcast(corpusStatsOf(batch, index)))
+      .select(col("qid"), col("term_id"), col("doc_id"), partial(p))
     // one aggregation: matched-term count (conjunctive gate, vs the qn
     // computed BEFORE the dictionary join — an out-of-vocabulary term
-    // must fail the conjunction) + the canonical-order score sum (same
-    // arithmetic as [[scores]])
-    val scored = h
-      .groupBy(col("qid"), col("doc_id"))
-      .agg(sort_array(collect_list(struct(col("term_id"), col("partial")))).as("ps"))
-      .select(col("qid"), col("doc_id"), size(col("ps")).as("mn"),
-        expr("aggregate(ps, 0d, (acc, x) -> acc + x.partial)").as("score"))
+    // must fail the conjunction) + the canonical-order score sum
+    val scored = termOrdered(h, "doc_id")
+      .select(col("qid"), col("doc_id"), size(col("ps")).as("mn"), termOrderSum.as("score"))
     val conj = scored.join(broadcast(nPerQ), "qid").filter(col("mn") === col("qn"))
     // tokenize SURVIVORS only, in ONE corpus pass: stream docsText through
     // a broadcast join against the conjunction survivors, then apply the
@@ -554,8 +661,7 @@ object Bm25Search {
     // dominant term of the phrase query on a stopword-dense corpus;
     // UTF8String.contains is a codegen'd scan with zero per-position
     // allocation.
-    def sepJoined(c: org.apache.spark.sql.Column) =
-      concat(lit(" "), array_join(c, " "), lit(" "))
+    def sepJoined(c: Column) = concat(lit(" "), array_join(c, " "), lit(" "))
     val conjSide =
       if (candBound.exists(_ <= PhraseBroadcastMaxCandidates)) broadcast(conj) else conj
     val verified = docsText
@@ -577,110 +683,21 @@ object Bm25Search {
         .agg(max(col("score")).as("score")),
       k)
 
-  /** Two-stage block-max-WAND-style pruned search — exact results,
-    * reference analog of the staged pruning in index_storage.py:111-194:
-    *
-    * stage A (θ bound): exactly score only each query's highest-idf
-    *   term's postings, sampled from at most [[ThetaBlocks]] of its
-    *   blocks; the kth best such single-term score is a LOWER bound θ on
-    *   the true kth best full score (any doc-subset + term-subset scoring
-    *   can only under-estimate; fewer than k sampled docs → no θ → no
-    *   pruning, still exact).
-    * stage B (candidate BLOCKS): classic WAND term ordering — per qid,
-    *   terms are sorted by their maximum possible contribution
-    *   mc_t = qtf·idf_t·(k1+1) (tf-saturation is bounded by k1+1), and the
-    *   maximal ascending prefix with Σ mc < θ is the WEAK set: a doc whose
-    *   postings lie only in weak terms cannot reach θ, so weak terms'
-    *   postings are NEVER TRAVERSED. Upper bounds are then computed at
-    *   BLOCK granularity from block metadata alone (no decode):
-    *   ub(qid, block) = Σ_strong qtf·idf·block_max(term, block) + Σ_weak
-    *   mc bounds every doc of the block, because each doc lives in
-    *   exactly one block. Keep blocks with ub ≥ θ.
-    * stage C (exact): decode only surviving blocks (semi-join on
-    *   block_no — whole stopword posting ranges are skipped), score
-    *   exactly, drop (qid, block) pairs that did not survive for that
-    *   qid, top-k. Every true top-k doc survives: score ≤ its block's ub.
-    *
-    * At scale: stopword-grade terms are usually weak (huge df → small
-    * idf·(k1+1) vs θ from a rare term), so their 10^11-entry posting
-    * lists are read NEITHER for candidates NOR for exact scoring outside
-    * candidate block ranges — the degenerate O(postings) scan only
-    * remains for queries made exclusively of stopwords.
-    */
-  def searchWand(queries: DataFrame, index: Bm25IndexTables, k: Int,
-                 p: Bm25Params = Bm25Params()): DataFrame =
-    collectBatch(queries) match {
-      case Some(rows) =>
-        routeWand(
-          compileRowsLocal(queries.sparkSession, tokenizeRows(rows), index.termStats),
-          index, k, p, persisted = false)
-      // over MaxDriverCompileQueries the per-qid route can't run on the
-      // driver; the one-pass full plan returns identical rows (WAND ≡ full
-      // is property-tested), and at that many distinct terms the batch
-      // probes essentially every block, so pruning had nothing to win
-      case None => searchFull(queries, index, k, p)
-    }
+  // ---- block-max WAND ---------------------------------------------------
 
-  /** Adaptive strategy choice per QUERY, decided from compile-time
-    * metadata alone: WAND's bound stages can only pay off when at least
-    * one query term is BLOCK-SPARSE (present in well under half the
-    * doc-range blocks — a term with df ≥ #blocks has a posting in every
-    * block by pigeonhole, so nothing can be skipped and the multi-pass
-    * machinery is pure overhead, measured blockRatio 1.0 on the dense test
-    * vocabulary). Each qid routes independently: sparse-term queries take
-    * the pruned path, dense/stopword-only queries take the one-pass full
-    * path, and the union is exact either way (WAND ≡ full is
-    * property-tested). df is already on the compiled qterms rows and
-    * n_docs is a one-row lookup, so routing costs no extra distributed
-    * work. */
-  private def routeWand(qterms: DataFrame, index: Bm25IndexTables, k: Int,
-                        p: Bm25Params, persisted: Boolean): DataFrame = {
-    val spark = qterms.sparkSession
-    import spark.implicits._
-    val rows = qterms.select(col("qid"), col("term"), col("qtf"), col("term_id"),
-      col("idf"), col("df")).as[(Long, String, Int, Long, Double, Long)].collect()
-    if (rows.isEmpty) return fullPath(qterms, index, k, p, persisted)
-    val nBlocks = math.max(1L, (index.docIdSpan + p.blockSpan - 1) / p.blockSpan)
-    val minDf = rows.groupBy(_._1).map { case (q, rs) => q -> rs.map(_._6).min }
-    val (wandRows, fullRows) = rows.partition(r => 2L * minDf(r._1) < nBlocks)
-    def frame(rs: Array[(Long, String, Int, Long, Double, Long)]) =
-      rs.toSeq.toDF("qid", "term", "qtf", "term_id", "idf", "df")
-    val parts =
-      (if (wandRows.nonEmpty) Seq(searchWandCompiled(frame(wandRows), index, k, p)) else Nil) ++
-      (if (fullRows.nonEmpty) Seq(fullPath(frame(fullRows), index, k, p, persisted)) else Nil)
-    parts.reduce(_ unionByName _)
-  }
-
-  private def fullPath(qterms: DataFrame, index: Bm25IndexTables, k: Int,
-                       p: Bm25Params, persisted: Boolean): DataFrame =
-    if (persisted) searchPersistedCompiled(qterms, index, k, p)
-    else searchCompiled(qterms, index, k, p)
-
-  /** [[searchWand]] over an already-compiled qterms LocalRelation — the
-    * four qterms subtrees below (rarest-term window, weak/strong split,
-    * strong broadcast, exact scoring) are then literal rows instead of
-    * four re-plans of the dictionary join (a previous version cached the
-    * distributed qterms here and leaked the cache; a LocalRelation needs
-    * no cache at all). */
   /** Candidate sets up to this size are materialized into a LocalRelation
     * (16 B/row → ≤ ~16 MB broadcast); larger ones stay a lazy plan. */
   private val MaxLocalCandidateBlocks = 1000000
 
-  /** `maxLocalCand` is overridable only so tests can exercise the lazy
-    * >cap fallback without a million-block fixture. */
-  private[graft] def searchWandCompiled(qterms: DataFrame, index: Bm25IndexTables, k: Int,
+  /** The pruned arm of [[searchPersistedWand]] over a driver-compiled
+    * batch. `maxLocalCand` is overridable only so tests can exercise the
+    * lazy >cap fallback without a million-block fixture. */
+  private[graft] def searchWandCompiled(b: LocalBatch, index: Bm25IndexTables, k: Int,
                                         p: Bm25Params,
                                         maxLocalCand: Int = MaxLocalCandidateBlocks): DataFrame = {
-    val spark = qterms.sparkSession
+    val spark = b.qterms.sparkSession
     import spark.implicits._
-    // The term probe is an In-filter built from the compiled (local)
-    // qterms rows, NOT a semi-join: `qterms.distinct()` is an Aggregate
-    // over a LocalRelation that Catalyst cannot collapse, so every action
-    // consuming the probe re-ran a 2-stage shuffle job just to rebuild
-    // the same tiny broadcast (3 actions × job + broadcast per call). The
-    // In-filter also pushes into the parquet scan on the persisted path.
-    val ids = qterms.select(col("term_id")).collect().map(_.getLong(0)).distinct.toSeq
-    val probed = index.probeBlocks(ids)
+    val probed = probe(b, index)
     // Materialize the candidate set ONCE: the stage-C plan consumes it
     // TWICE (block_no semi-join for the decode + the per-qid survival
     // filter), and as a lazy subtree each use would re-run stages A+B —
@@ -689,12 +706,12 @@ object Bm25Search {
     // LocalRelation (broadcast-ready literal rows); a web-scale candidate
     // flood past the cap falls back to the lazy plan rather than the
     // driver's memory.
-    val candLazy = wandCandidateBlocks(qterms, probed, index, k, p)
+    val candLazy = wandCandidateBlocks(b, probed, index, k, p)
     val candRows = candLazy.select(col("qid"), col("block_no"))
       .as[(Long, Long)].limit(maxLocalCand + 1).collect()
-    val local = candRows.length <= maxLocalCand
+    val inDriver = candRows.length <= maxLocalCand
     val candBlocks =
-      if (local) candRows.toSeq.toDF("qid", "block_no")
+      if (inDriver) candRows.toSeq.toDF("qid", "block_no")
       else candLazy
 
     // Stage C: decode ONLY surviving blocks, score exactly, and drop
@@ -704,27 +721,27 @@ object Bm25Search {
     // list is plain driver dedup (an Aggregate-over-LocalRelation would
     // shuffle); the >cap fallback keeps the distributed distinct.
     val candBlockNos =
-      if (local) broadcast(candRows.map(_._2).distinct.toSeq.toDF("block_no"))
+      if (inDriver) broadcast(candRows.map(_._2).distinct.toSeq.toDF("block_no"))
       else candBlocks.select(col("block_no")).distinct()
     val decoded = index.decode(
       probed.join(candBlockNos, Seq("block_no"), "left_semi"))
     val exact = scores(
-      hits(qterms, decoded, index.corpusStatsLocal, p)
+      hits(b.qterms, decoded, corpusStatsOf(b, index), p)
         .withColumn("block_no", (col("doc_id") / p.blockSpan).cast("long"))
         .join(candBlocks, Seq("qid", "block_no"), "left_semi")
         .drop("block_no"))
     topK(exact, k)
   }
 
-  /** Stages A+B of [[searchWand]]: the surviving (qid, block_no) candidate
-    * set, computed from block METADATA only (no posting decoded except the
-    * θ seed's capped sample). Package-visible so benchmarks can report the
-    * decode-pruning ratio (candidate blocks vs all probed blocks) as a
-    * first-class number. */
-  private[graft] def wandCandidateBlocks(qterms: DataFrame, probed: DataFrame,
+  /** Stages A+B of [[searchPersistedWand]]: the surviving (qid, block_no)
+    * candidate set, computed from block METADATA only (no posting decoded
+    * except the θ seed's capped sample). Package-visible so benchmarks can
+    * report the decode-pruning ratio (candidate blocks vs all probed
+    * blocks) as a first-class number. */
+  private[graft] def wandCandidateBlocks(b: LocalBatch, probed: DataFrame,
                                          index: Bm25IndexTables, k: Int,
                                          p: Bm25Params): DataFrame = {
-    val spark = qterms.sparkSession
+    val spark = b.qterms.sparkSession
     import spark.implicits._
     // Stage A: θ per qid from the rarest (max-idf, term-asc tiebreak)
     // term, scored over at most the term's first ThetaBlocks posting
@@ -741,41 +758,35 @@ object Bm25Search {
     // final bound filter, re-running the θ decode per use; as driver rows
     // it is computed exactly once and every consumer gets literal values.
     //
-    // The rarest-term pick (max idf, term-asc tiebreak — the former
-    // per-qid row_number window) is plain driver arithmetic over the
-    // compiled local qterms rows: a window over a LocalRelation still
-    // shuffles, and its `.distinct()` broadcast re-ran an aggregate job
-    // per consuming action.
-    val qRows = qterms.select(col("qid"), col("term"), col("qtf"), col("term_id"),
-      col("idf")).as[(Long, String, Int, Long, Double)].collect()
-    val byQid = qRows.groupBy(_._1)
-    val rarestRows = byQid.values.map(rs =>
-      rs.minBy { case (_, term, _, _, idf) => (-idf, term) }).toSeq
-    val rarestIds = rarestRows.map(_._4).distinct
-    val rarest = rarestRows.toDF("qid", "term", "qtf", "term_id", "idf")
+    // The rarest-term pick is plain driver arithmetic over the compiled
+    // rows: a window over a LocalRelation still shuffles, and its
+    // `.distinct()` broadcast re-ran an aggregate job per consuming
+    // action.
+    val byQid = b.rows.groupBy(_._1)
+    val rarest = local(spark, byQid.values.map(rs =>
+      rs.minBy { case (_, term, _, _, idf, _) => (-idf, term) }).toSeq)
     val wBlk = Window.partitionBy(col("term_id")).orderBy(col("block_no").asc)
     val rareCapped = probed
-      .filter(col("term_id").isin(rarestIds: _*))
+      .filter(col("term_id").isin(rarest.rows.map(_._4).distinct: _*))
       .withColumn("brn", row_number().over(wBlk))
       .filter(col("brn") <= ThetaBlocks)
       .drop("brn")
-    val rareScores = scores(hits(rarest, index.decode(rareCapped), index.corpusStatsLocal, p))
-    val theta: Map[Long, Double] = TopKAggregator.topK(rareScores, k)
+    val rareScores = scores(hits(rarest.qterms, index.decode(rareCapped),
+      corpusStatsOf(rarest, index), p))
+    val theta: Map[Long, Double] = topK(rareScores, k)
       .filter(col("rank") === k)
       .select(col("qid"), col("score"))
       .as[(Long, Double)].collect().toMap
 
     // Stage B: weak/strong term split per qid (ascending max-contribution
     // prefix below θ is weak) — plain driver arithmetic over the compiled
-    // qterms rows in the SAME (mc asc, term asc) order and left-to-right
-    // summation the former window computed, so the split is
-    // value-identical.
+    // rows in (mc asc, term asc) order with left-to-right summation.
     val strongRows = scala.collection.mutable.ArrayBuffer[(Long, Long, Int, Double)]()
     val weakSum = scala.collection.mutable.Map[Long, Double]()
     byQid.foreach { case (qid, rs) =>
       val th = theta.get(qid)
       var cum = 0.0
-      rs.map { case (_, term, qtf, termId, idf) =>
+      rs.map { case (_, term, qtf, termId, idf, _) =>
         (term, qtf, termId, idf, qtf * idf * (p.k1 + 1.0))
       }.sortBy { case (term, _, _, _, mc) => (mc, term) }
         .foreach { case (_, qtf, termId, idf, mc) =>
@@ -794,22 +805,19 @@ object Bm25Search {
     // block's max contribution upper-bounds every doc in it — computed
     // from block METADATA alone, no posting is decoded in stage B
     // (blockSpan× fewer rows than the per-doc bound it replaces).
-    // ub summed in canonical term order (sort_array + fold, like
-    // [[scores]]): the >cap fallback path consumes this frame TWICE (the
-    // decode semi-join and the survival filter), and a partition-order-
-    // dependent float sum could flip a block exactly at the θ boundary
-    // between the two evaluations — surviving the filter while its
-    // postings were never decoded. Canonical order makes both
-    // evaluations bit-identical. ≤32 terms per (qid, block) → O(1)/row.
-    probed
+    // ub is summed in canonical term order like [[scores]]: the >cap
+    // fallback path consumes this frame TWICE (the decode semi-join and
+    // the survival filter), and a partition-order-dependent float sum
+    // could flip a block exactly at the θ boundary between the two
+    // evaluations — surviving the filter while its postings were never
+    // decoded. Canonical order makes both evaluations bit-identical.
+    val blockMax = probed
       .select(col("term_id"), col("block_no"),
         (col("block_max_tfnorm") * lit(index.wandBoundScale)).as("bmax"))
       .join(broadcast(strong), "term_id")
-      .groupBy(col("qid"), col("block_no"))
-      .agg(sort_array(collect_list(struct(col("term_id"),
-        (col("qtf") * col("idf") * col("bmax")).as("c")))).as("cs"))
-      .select(col("qid"), col("block_no"),
-        expr("aggregate(cs, 0d, (acc, x) -> acc + x.c)").as("ub"))
+      .withColumn("partial", col("qtf") * col("idf") * col("bmax"))
+    termOrdered(blockMax, "block_no")
+      .select(col("qid"), col("block_no"), termOrderSum.as("ub"))
       .join(broadcast(bounds), Seq("qid"), "left")
       .filter(col("theta").isNull ||
         (col("ub") + coalesce(col("weak_sum"), lit(0.0))) >= col("theta"))
@@ -906,11 +914,11 @@ case class Bm25IndexTables(
     * re-ran a parquet scan job. The value cannot change under an open
     * index (updates swap in a new instance).
     *
-    * Used ONLY by the driver-compiled paths (persisted/WAND), which
-    * already collect at construction time; the declarative paths
-    * ([[Bm25Search.searchFull]] etc.) keep the lazy corpusStats subtree
-    * so building their plans stays action-free (the [[fromDocs]]
-    * laziness contract — first touching this val runs a job). */
+    * Used ONLY for driver-compiled query batches, which already collect
+    * at compile time; distributed batches ([[Bm25Search.searchFull]]
+    * etc.) keep the lazy corpusStats subtree so building their plans
+    * stays action-free (the [[fromDocs]] laziness contract — first
+    * touching this val runs a job). */
   lazy val corpusStatsLocal: DataFrame = {
     val spark = corpusStats.sparkSession
     spark.createDataFrame(

@@ -32,53 +32,41 @@ final case class QueryTiming(count: Long, meanSec: Double, stdSec: Double)
   * At scale this is the serving-tier pattern from SCALE.md: hot posting
   * blocks pinned in executor memory, queries as small broadcast joins. */
 final class SearchSession private (spark: SparkSession, val index: Bm25IndexTables,
-                                   docsText: DataFrame) {
+                                   docsText: DataFrame,
+                                   savedConf: Map[String, Option[String]]) {
 
-  /** Compile through the session's term cache — a warm query resolves its
+  /** Compile through the session's term cache, then the same chain as
+    * [[Bm25Search.searchPersisted]] — a warm query resolves its
     * dictionary entries with ZERO Spark jobs (the reference holds its
-    * vocab resident for the Searcher's life, index_loader.py:25-27);
-    * only never-seen terms pay one isin-filtered lookup job. Misses are
-    * cached too (None) so repeated unknown terms don't re-probe. */
+    * vocab resident for the Searcher's life, index_loader.py:25-27). A
+    * corpus-scale batch keeps the fully distributed plan (identical
+    * rows) instead of serializing 10^6 queries through the driver. */
   def search(queries: DataFrame, k: Int, p: Bm25Params = Bm25Params()): DataFrame =
-    // the session compile collects the batch to the driver, so it carries
-    // the same size gate as Bm25Search.searchPersisted: a corpus-scale
-    // analytics batch routed through a session falls back to the fully
-    // distributed plan (identical rows) instead of serializing 10^6
-    // queries through the driver
-    Bm25Search.collectBatch(queries) match {
-      case None => Bm25Search.searchFull(queries, index, k, p)
-      case Some(rows) => searchRows(rows, k, p)
-    }
+    Bm25Search.rank(Bm25Search.compile(queries, index.termStats, resolve), index, k, p)
 
-  private def searchRows(rows: Seq[(Long, String)], k: Int, p: Bm25Params): DataFrame = {
-    import spark.implicits._
-    val counts = Bm25Search.tokenizeRows(rows)
-    // resolve through a LOCAL snapshot: the shared dict may be wiped (by
-    // this call's own overflow handling or a concurrent one) between the
-    // lookup and the use, so the query must never read the shared map twice
-    val terms = counts.map(_._2).distinct
+  /** The cached dictionary lookup: only never-seen terms pay one
+    * isin-filtered lookup job. Misses are cached too (None) so repeated
+    * unknown terms don't re-probe. The query resolves through a LOCAL
+    * snapshot: the shared dict may be wiped (by this call's own overflow
+    * handling or a concurrent one) between the lookup and the use, so it
+    * must never read the shared map twice. */
+  private def resolve(terms: Seq[String]): Map[String, (Long, Double, Long)] = {
     val fromCache = terms.flatMap(t => termDict.get(t).map(t -> _)).toMap
     val missing = terms.filterNot(fromCache.contains)
-    val resolved =
-      if (missing.isEmpty) fromCache
-      else {
-        val found = Bm25Search.lookupTerms(missing, index.termStats)
-        // entry count kept in an O(1) counter: TrieMap.size walks the
-        // whole trie (up to 2M entries) and this runs per miss-bearing
-        // query on the latency path. The count is advisory (a soft cap),
-        // so racy over/under-counting is harmless.
-        if (dictEntries.get() + missing.size > MaxDictEntries) {
-          termDict.clear(); dictEntries.set(0)
-        }
-        missing.foreach { t =>
-          if (termDict.put(t, found.get(t)).isEmpty) dictEntries.incrementAndGet()
-        }
-        fromCache ++ missing.map(t => t -> found.get(t))
+    val found = Bm25Search.lookupTerms(index.termStats)(missing)
+    if (missing.nonEmpty) {
+      // entry count kept in an O(1) counter: TrieMap.size walks the
+      // whole trie (up to 2M entries) and this runs per miss-bearing
+      // query on the latency path. The count is advisory (a soft cap),
+      // so racy over/under-counting is harmless.
+      if (dictEntries.get() + missing.size > MaxDictEntries) {
+        termDict.clear(); dictEntries.set(0)
       }
-    val qterms = counts.flatMap { case (qid, t, qtf) =>
-      resolved(t).map { case (id, idf, df) => (qid, t, qtf, id, idf, df) }
-    }.toDF("qid", "term", "qtf", "term_id", "idf", "df")
-    Bm25Search.searchPersistedCompiled(qterms, index, k, p)
+      missing.foreach { t =>
+        if (termDict.put(t, found.get(t)).isEmpty) dictEntries.incrementAndGet()
+      }
+    }
+    fromCache.collect { case (t, Some(v)) => t -> v } ++ found
   }
 
   /** query-term dictionary cache: bounded by wipe-on-overflow (query
@@ -175,17 +163,8 @@ final class SearchSession private (spark: SparkSession, val index: Bm25IndexTabl
     index.termStats.unpersist()
     index.corpusStats.unpersist()
     docsText.unpersist()
-    savedConf.foreach { case (key, v) =>
-      v match {
-        case Some(value) => spark.conf.set(key, value)
-        case None => spark.conf.unset(key)
-      }
-    }
-    ()
+    SearchSession.restoreConf(spark, savedConf)
   }
-
-  /** Pre-open conf values to restore on close (serving tuning). */
-  private[query] var savedConf: Map[String, Option[String]] = Map.empty
 }
 
 object SearchSession {
@@ -193,40 +172,33 @@ object SearchSession {
     * tables (the open cost is paid once, like the reference's index
     * load).
     *
-    * `tuneForServing` (default true) sets point-query session confs for
-    * the session's life (restored by close()): AQE off — serving plans
-    * are small and fixed-shape, so AQE's per-stage replanning triples the
-    * job count and adds ~2× latency, while its benefits (skew splits,
-    * runtime coalescing) never apply to a k-row result — and shuffle
-    * partitions at max(8, cores/4): the post-scan aggregations carry only
-    * partial-aggregated candidate rows, so corpus-scale reduce width just
-    * buys scheduling overhead. Measured on a 1M-doc index at local[32]:
-    * p50 1.07 s → 0.49 s, 7 jobs/query → 3. A serving tier owns its
-    * SparkSession, so standing confs are the right mechanism; pass false
-    * when sharing the session with batch analytics. */
-  def open(spark: SparkSession, indexDir: String,
-           tuneForServing: Boolean = true): SearchSession = {
-    val saved =
-      if (!tuneForServing) Map.empty[String, Option[String]]
-      else {
-        val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
-        val prev = keys.map(key => key -> spark.conf.getOption(key)).toMap
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.shuffle.partitions",
-          math.max(8, spark.sparkContext.defaultParallelism / 4).toString)
-        prev
-      }
+    * Sets point-query session confs for the session's life (restored by
+    * close()): AQE off — serving plans are small and fixed-shape, so
+    * AQE's per-stage replanning triples the job count and adds ~2×
+    * latency, while its benefits (skew splits, runtime coalescing) never
+    * apply to a k-row result — and shuffle partitions at max(8,
+    * cores/4): the post-scan aggregations carry only partial-aggregated
+    * candidate rows, so corpus-scale reduce width just buys scheduling
+    * overhead. Measured on a 1M-doc index at local[32]: p50 1.07 s →
+    * 0.49 s, 7 jobs/query → 3. A serving tier owns its SparkSession, so
+    * standing confs are the right mechanism. */
+  def open(spark: SparkSession, indexDir: String): SearchSession = {
+    val saved = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+      .map(key => key -> spark.conf.getOption(key)).toMap
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.shuffle.partitions",
+      math.max(8, spark.sparkContext.defaultParallelism / 4).toString)
     // a failed open must not leak the serving confs into the caller's
     // session (no SearchSession exists afterwards to close())
-    def restore(): Unit = saved.foreach { case (key, v) =>
-      v match {
-        case Some(value) => spark.conf.set(key, value)
-        case None => spark.conf.unset(key)
-      }
-    }
     try openWith(spark, indexDir, saved)
-    catch { case e: Throwable => restore(); throw e }
+    catch { case e: Throwable => restoreConf(spark, saved); throw e }
   }
+
+  private def restoreConf(spark: SparkSession, saved: Map[String, Option[String]]): Unit =
+    saved.foreach {
+      case (key, Some(value)) => spark.conf.set(key, value)
+      case (key, None) => spark.conf.unset(key)
+    }
 
   private def openWith(spark: SparkSession, indexDir: String,
                        saved: Map[String, Option[String]]): SearchSession = {
@@ -244,7 +216,8 @@ object SearchSession {
     // scan stage), while cached-batch min/max stats prune the non-probed
     // term ranges wherever the partition bounds land. One executor-node's
     // worth of parallelism is plenty for a k-row point lookup; corpus-
-    // scale batches bypass the session path entirely (collectBatch gate).
+    // scale batches bypass the session path entirely (the driver-compile
+    // cap, Bm25Search.MaxDriverCompileQueries).
     val servePartitions = math.max(8, spark.sparkContext.defaultParallelism / 4)
     val warm = idx.copy(
       blocks = idx.blocks.coalesce(servePartitions).persist(),
@@ -253,8 +226,6 @@ object SearchSession {
     warm.blocks.count(); warm.termStats.count(); warm.corpusStats.count()
     val docsText = IndexUpdater.liveDocs(spark, indexDir)
       .select(col("doc_id"), col("text")).persist()
-    val s = new SearchSession(spark, warm, docsText)
-    s.savedConf = saved
-    s
+    new SearchSession(spark, warm, docsText, saved)
   }
 }

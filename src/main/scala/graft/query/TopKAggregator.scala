@@ -25,7 +25,7 @@ import org.apache.spark.sql.types._
   * the typed route (groupByKey + kryo Buf + per-row tuple decode) paid a
   * full encoder deserialization plus two tuple allocations plus an
   * object-array copy PER INPUT ROW — measured as ~85% of the 40-query
-  * batch wall time over a 1M-doc index (BatchProbe: scores 1.3 s,
+  * batch wall time over a 1M-doc index (per-stage timing: scores 1.3 s,
   * scores+topk 9.6 s). Here the input side stays codegen'd UnsafeRows and
   * update touches two primitive array slots.
   */

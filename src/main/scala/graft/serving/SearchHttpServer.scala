@@ -67,9 +67,11 @@ final class SearchHttpServer private (server: HttpServer, session: SearchSession
         }
       }
     } catch {
+      // the exception stays in the server log: its message can carry
+      // internal paths and plan details a client must not see
       case e: Throwable =>
-        respond(ex, 500,
-          s"""{"error":${SearchHttpServer.jsonString(Option(e.getMessage).getOrElse("internal error"))}}""")
+        SearchHttpServer.log.error(s"search request failed: ${ex.getRequestURI}", e)
+        respond(ex, 500, """{"error":"internal error"}""")
     } finally ex.close()
 
   private def respond(ex: HttpExchange, status: Int, body: String): Unit = {
@@ -85,6 +87,8 @@ final class SearchHttpServer private (server: HttpServer, session: SearchSession
 }
 
 object SearchHttpServer {
+
+  private val log = org.slf4j.LoggerFactory.getLogger(classOf[SearchHttpServer])
 
   /** Start serving `session` on `port` (0 = ephemeral) bound to
     * loopback; a small fixed pool handles concurrent requests (the

@@ -112,20 +112,15 @@ object Training {
     * = 1 on the query's own positive — the CE target position.
     *
     * Decode is restricted to the batch's docs (broadcast semi-join), so
-    * the matrix costs one bounded posting probe, not a corpus scan. */
+    * the matrix costs one bounded posting probe, not a corpus scan; the
+    * batch queries are bounded by construction (bsize·nway rows), so
+    * they compile on the driver. */
   def inBatchScores(queries: DataFrame, triples: DataFrame, index: Bm25IndexTables,
                     p: Bm25Params = Bm25Params()): DataFrame = {
     val batchDocs = triples.select(col("doc_id")).distinct()
     val qids = triples.select(col("qid")).distinct()
-    // batch queries are bounded by construction (bsize·nway rows), so the
-    // compile takes the driver fast lane — one dictionary lookup job, not
-    // a tokenize→groupBy→join stage chain per downstream reference
-    val qterms = Bm25Search.compileQueriesAuto(
-      queries.join(qids, Seq("qid"), "left_semi"), index.termStats)
-    val decoded = index.decode(
-        index.blocks.join(broadcast(qterms.select(col("term_id")).distinct()), "term_id"))
-      .join(broadcast(batchDocs), Seq("doc_id"), "left_semi")
-    val scored = Bm25Search.scores(Bm25Search.hits(qterms, decoded, index.corpusStats, p))
+    val scored = Bm25Search.scores(Bm25Search.hitsFor(
+      queries.join(qids, Seq("qid"), "left_semi"), broadcast(batchDocs), index, p))
     val ownNegs = triples.filter(col("way") > 0).select(col("qid"), col("doc_id"))
     val ownPos = triples.filter(col("way") === 0)
       .select(col("qid"), col("doc_id"), lit(1).as("label"))
@@ -156,21 +151,12 @@ object Training {
   /** Flipr-style student scores (sum of each doc's top-`topTerms` term
     * partials, colbert.py:172-185) for exactly the given (query, doc)
     * pairs — the distillation student in [[losses]]; [[Bm25Search.searchFlipr]]
-    * is the same reduce followed by top-k. */
+    * is the same reduce ([[Bm25Search.fliprScores]]) followed by top-k. */
   def fliprScoresFor(queries: DataFrame, docIds: DataFrame, index: Bm25IndexTables,
-                     topTerms: Int = 2, p: Bm25Params = Bm25Params()): DataFrame = {
-    val qterms = Bm25Search.compileQueriesAuto(queries, index.termStats)
-    val decoded = index.decode(
-        index.blocks.join(broadcast(qterms.select(col("term_id")).distinct()), "term_id"))
-      .join(broadcast(docIds.select(col("doc_id"))), Seq("doc_id"), "left_semi")
-    Bm25Search.hits(qterms, decoded, index.corpusStats, p)
-      .groupBy(col("qid"), col("doc_id"))
-      .agg(sort_array(collect_list(struct(col("partial"), col("term_id"))),
-        asc = false).as("ps"))
-      .select(col("qid"), col("doc_id"),
-        expr(s"aggregate(slice(ps, 1, $topTerms), 0d, (acc, x) -> acc + x.partial)")
-          .as("student_score"))
-  }
+                     topTerms: Int = 2, p: Bm25Params = Bm25Params()): DataFrame =
+    Bm25Search.fliprScores(
+        Bm25Search.hitsFor(queries, broadcast(docIds.select(col("doc_id"))), index, p), topTerms)
+      .withColumnRenamed("score", "student_score")
 
   /** Loss reductions (SURVEY §2.5 A11; reference training.py:159-196):
     * per query,

@@ -91,7 +91,7 @@ class IndexUpdaterSpec extends AnyFunSuite {
     IndexUpdater.remove(spark, dir, removedIds)
     val merged = IndexUpdater.openMerged(spark, dir)
     val gotFull = byUrl(Bm25Search.searchFull(queries, merged, 10, p), mergedDocs(dir))
-    val gotWand = byUrl(Bm25Search.searchWand(queries, merged, 10, p), mergedDocs(dir))
+    val gotWand = byUrl(Bm25Search.searchPersistedWand(queries, merged, 10, p), mergedDocs(dir))
 
     // docIds legitimately differ between a merged view (original ids kept)
     // and a fresh rebuild (renumbered) — so at the rank-k cut, equal-score

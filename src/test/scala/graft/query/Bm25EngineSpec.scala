@@ -12,7 +12,8 @@ import graft.index.Bm25Params
 /** Rank-identity gate (SURVEY §5 items 3-4): engine top-k from the
   * compressed block index must be rank- AND score-identical (bit-exact)
   * to the exhaustive in-memory oracle, at every input partitioning, on
-  * every search path (full / WAND-pruned / heap-aggregated). Lexical
+  * every ranked entry point (full / window / persisted / WAND-pruned /
+  * pre-compiled). Lexical
   * analog of the reference e2e gate (colbert/tests/e2e_test.py:79). */
 class Bm25EngineSpec extends AnyFunSuite {
 
@@ -47,13 +48,31 @@ class Bm25EngineSpec extends AnyFunSuite {
 
   private def queriesDf = queriesLocal.toDF("qid", "text")
 
-  test("searchFull is rank- and score-identical to the exhaustive oracle") {
-    val index = Bm25IndexTables.fromDocs(docsWithIds)
-    val got = collectRanking(Bm25Search.searchFull(queriesDf, index, K))
-    val nonEmpty = oracle.filter(_._2.nonEmpty)
-    assert(got.keySet == nonEmpty.keySet)
-    nonEmpty.foreach { case (q, want) =>
-      assert(got(q) == want, s"qid=$q\n got=${got(q)}\nwant=$want")
+  // every ranked entry point whose rows must equal OracleBm25.topK bit for
+  // bit; blockSpan 16 spreads the corpus over many blocks so the WAND row
+  // routes its sparse-term queries through the pruned arm
+  private val OracleP = Bm25Params(blockSpan = 16)
+  private val rankedEntryPoints
+      : Seq[(String, (org.apache.spark.sql.DataFrame, Bm25IndexTables) => org.apache.spark.sql.DataFrame)] =
+    Seq(
+      "searchFull" -> ((q, ix) => Bm25Search.searchFull(q, ix, K, OracleP)),
+      "searchFullWindow" -> ((q, ix) => Bm25Search.searchFullWindow(q, ix, K, OracleP)),
+      "searchPersisted" -> ((q, ix) => Bm25Search.searchPersisted(q, ix, K, OracleP)),
+      "searchPersistedWand" -> ((q, ix) => Bm25Search.searchPersistedWand(q, ix, K, OracleP)),
+      "compileQueriesLocal → searchPersistedCompiled" -> ((q, ix) =>
+        Bm25Search.searchPersistedCompiled(
+          Bm25Search.compileQueriesLocal(q, ix.termStats), ix, K, OracleP)))
+
+  private lazy val oracleIndex = Bm25IndexTables.fromDocs(docsWithIds, OracleP)
+
+  rankedEntryPoints.foreach { case (name, search) =>
+    test(s"$name is rank- and score-identical to the exhaustive oracle") {
+      val got = collectRanking(search(queriesDf, oracleIndex))
+      val nonEmpty = oracle.filter(_._2.nonEmpty)
+      assert(got.keySet == nonEmpty.keySet)
+      nonEmpty.foreach { case (q, want) =>
+        assert(got(q) == want, s"qid=$q\n got=${got(q)}\nwant=$want")
+      }
     }
   }
 
@@ -123,7 +142,7 @@ class Bm25EngineSpec extends AnyFunSuite {
     val p = Bm25Params(blockSpan = 16)
     val index = Bm25IndexTables.fromDocs(docsWithIds, p)
     val full = collectRanking(Bm25Search.searchFull(queriesDf, index, K, p))
-    val wand = collectRanking(Bm25Search.searchWand(queriesDf, index, K, p))
+    val wand = collectRanking(Bm25Search.searchPersistedWand(queriesDf, index, K, p))
     assert(wand == full)
 
     // the split must actually exercise BOTH routes on this corpus
@@ -138,20 +157,13 @@ class Bm25EngineSpec extends AnyFunSuite {
 
     // the >cap lazy-candidate fallback (candidate set too large for a
     // driver LocalRelation) must return the same rows as the local path
-    val qtermsLocal = Bm25Search.compileQueriesLocal(queriesDf, index.termStats)
+    val batch = Bm25Search.localBatch(Bm25Search.compileQueriesLocal(queriesDf, index.termStats))
     val viaLocal = collectRanking(
-      Bm25Search.searchWandCompiled(qtermsLocal, index, K, p))
+      Bm25Search.searchWandCompiled(batch, index, K, p))
     val viaLazy = collectRanking(
-      Bm25Search.searchWandCompiled(qtermsLocal, index, K, p, maxLocalCand = 0))
+      Bm25Search.searchWandCompiled(batch, index, K, p, maxLocalCand = 0))
     assert(viaLazy == viaLocal,
       "lazy >cap candidate fallback diverges from the materialized path")
-  }
-
-  test("heap-Aggregator top-k ≡ window top-k") {
-    val index = Bm25IndexTables.fromDocs(docsWithIds)
-    val full = collectRanking(Bm25Search.searchFull(queriesDf, index, K))
-    val agg = collectRanking(Bm25Search.searchFullAgg(queriesDf, index, K))
-    assert(agg == full)
   }
 
   test("results are bit-identical under different input partitioning (local[8]≡local[32] analog)") {
@@ -210,7 +222,7 @@ class Bm25EngineSpec extends AnyFunSuite {
   }
 
   test("oversized batches skip the driver compile; fallback rows ≡ driver-compiled rows") {
-    // collectBatch is the size gate for searchPersisted/searchWand: over
+    // collectBatch is the size gate for the driver compile: over
     // the cap it must return None (→ the fully distributed plan), under
     // it the exact rows. Exercised with a tiny cap so the test needs no
     // 4096-query fixture.
@@ -225,20 +237,24 @@ class Bm25EngineSpec extends AnyFunSuite {
     assert(viaPersisted == viaFull)
   }
 
-  test("compileQueriesAuto (driver fast lane) ≡ compileQueries (distributed) rows") {
-    // the training operators route through the auto compile; its driver
-    // branch must resolve exactly the rows the distributed plan produces
+  test("driver compile ≡ compileQueries (distributed) rows") {
+    // searchPersisted, the WAND route and the training scorers compile
+    // driver-sized batches on the driver; that branch must resolve exactly
+    // the rows the distributed plan produces
     val index = Bm25IndexTables.fromDocs(docsWithIds)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select(col("qid"), col("term"), col("qtf"), col("term_id"), col("idf"), col("df"))
         .as[(Long, String, Int, Long, Double, Long)].collect().toSet
-    assert(rows(Bm25Search.compileQueriesAuto(queriesDf, index.termStats)) ==
-      rows(Bm25Search.compileQueries(queriesDf, index.termStats)))
+    def viaDriver(q: org.apache.spark.sql.DataFrame) =
+      Bm25Search.compile(q, index.termStats, Bm25Search.lookupTerms(index.termStats)) match {
+        case b: Bm25Search.LocalBatch => rows(b.qterms)
+        case other => fail(s"driver-sized batch compiled as $other")
+      }
+    assert(viaDriver(queriesDf) == rows(Bm25Search.compileQueries(queriesDf, index.termStats)))
     // duplicated qid rows: the driver lane must merge multiplicity across
     // rows exactly like the distributed groupBy(qid, term)
     val dup = queriesDf.union(queriesDf.limit(2))
-    assert(rows(Bm25Search.compileQueriesAuto(dup, index.termStats)) ==
-      rows(Bm25Search.compileQueries(dup, index.termStats)))
+    assert(viaDriver(dup) == rows(Bm25Search.compileQueries(dup, index.termStats)))
   }
 
   test("randomized corpora: phrase ≡ naive sliding-window oracle across seeds") {
@@ -293,7 +309,7 @@ class Bm25EngineSpec extends AnyFunSuite {
       val qs = Synthesizer.queries(spark, 12, 150, seed = seed.toLong * 77 + 1)
       val index = Bm25IndexTables.fromDocs(ids, p)
       val full = collectRanking(Bm25Search.searchFull(qs, index, 5, p))
-      val wand = collectRanking(Bm25Search.searchWand(qs, index, 5, p))
+      val wand = collectRanking(Bm25Search.searchPersistedWand(qs, index, 5, p))
       assert(wand == full, s"seed=$seed")
     }
   }

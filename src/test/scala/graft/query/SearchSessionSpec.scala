@@ -76,4 +76,28 @@ class SearchSessionSpec extends AnyFunSuite {
       assert(session.timing.count == 1)
     } finally session.close()
   }
+
+  test("a warm session resolves a repeated query's terms with zero Spark jobs") {
+    // the term cache is why the session compiles through its own lookup:
+    // a cold query pays ONE dictionary job for its unseen terms, the same
+    // query again pays none — only the batch collect, which it shares
+    // with every driver compile, may still schedule work
+    val dir = Files.createTempDirectory("graft-session-warm").toString
+    IndexBuilder.build(spark, Synthesizer.pages(spark, 120, 3), dir, auditExtraction = false)
+    val queries = Synthesizer.queries(spark, 5, 120)
+    val sc = spark.sparkContext
+    def jobsIn(group: String)(body: => Unit): Int = {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      sc.statusTracker.getJobIdsForGroup(group).length
+    }
+    val session = SearchSession.open(spark, dir)
+    try {
+      val collectOnly = jobsIn("warm-collect") { Bm25Search.collectBatch(queries); () }
+      val cold = jobsIn("warm-cold") { session.search(queries, 10); () }
+      val warm = jobsIn("warm-again") { session.search(queries, 10); () }
+      assert(cold == collectOnly + 1, s"cold compile: $cold jobs, batch collect $collectOnly")
+      assert(warm == collectOnly, s"warm compile: $warm jobs, batch collect $collectOnly")
+    } finally session.close()
+  }
 }

@@ -90,4 +90,25 @@ class SearchHttpServerSpec extends AnyFunSuite {
       session.close()
     }
   }
+
+  test("an internal failure answers 500 without leaking its message or the index path") {
+    val dir = Files.createTempDirectory("graft-http-fail").toString
+    IndexBuilder.build(spark, Synthesizer.pages(spark, 60, 2), dir, auditExtraction = false)
+    val session = SearchSession.open(spark, dir)
+    val server = SearchHttpServer.start(session)
+    try {
+      // drop the session's cached tables and the files under them: the
+      // next uncached query fails inside Spark with the missing path in
+      // its message
+      session.close()
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
+      }
+      rm(new java.io.File(dir))
+      val (status, body) = get(s"http://127.0.0.1:${server.port}/api/search?query=w7&k=3")
+      assert(status == 500)
+      assert(body == """{"error":"internal error"}""", body)
+      assert(!body.contains(dir) && !body.contains("graft-http-fail"), body)
+    } finally server.stop()
+  }
 }

@@ -200,8 +200,8 @@ class TrainingSpec extends AnyFunSuite {
     Training.inBatchScores(queries, triples, index)
     val qids = triples.select(col("qid")).distinct()
     val base = jobsIn("ib-gate-base") {
-      Bm25Search.compileQueriesAuto(
-        queries.join(qids, Seq("qid"), "left_semi"), index.termStats)
+      Bm25Search.compile(queries.join(qids, Seq("qid"), "left_semi"),
+        index.termStats, Bm25Search.lookupTerms(index.termStats))
       ()
     }
     val gateOnly = jobsIn("ib-gate-agg") {
