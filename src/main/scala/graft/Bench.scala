@@ -34,7 +34,9 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  private def session(cpus: Int): SparkSession = {
+  /** The local[cpus] session every bench JVM (this parent, ScaleRunner,
+    * WandRegimeRunner) measures in; `conf` adds settings on top. */
+  private[graft] def session(cpus: Int, conf: (String, String)*): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(s"graft-bench-$cpus")
@@ -42,23 +44,62 @@ object Bench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       // ride out long GC pauses instead of expiring the local executor
+      // (a heartbeat expiry mid-build cascades into a dead context)
       .config("spark.network.timeout", "600s")
       .config("spark.executor.heartbeatInterval", "60s")
+      .config(conf.toMap)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }
 
-  /** Fork an isolated, core-pinned child JVM (see [[BenchFork.fork]]).
-    * Pinning (taskset + ActiveProcessorCount) makes the child's GC/JIT/
-    * pool sizing match a dedicated N-core executor node; heap scales at
-    * 2 GB/core (N vs 4N EXECUTORS means 4× the aggregate memory — a
-    * fixed heap would hand the low-core baseline 4× the per-core memory
-    * and bill the high-core run 4× the GC pressure). */
+  /** Fork an isolated, core-pinned child JVM running `mainClass args...`
+    * and return its merged stdout+stderr. Pinning (taskset +
+    * ActiveProcessorCount) makes the child's GC/JIT/pool sizing match a
+    * dedicated N-core executor node; heap scales at 2 GB/core (N vs 4N
+    * EXECUTORS means 4× the aggregate memory — a fixed heap would hand
+    * the low-core baseline 4× the per-core memory and bill the high-core
+    * run 4× the GC pressure). */
   private def fork(mainClass: String, cpus: Int, args: Seq[String],
-                   heapGb: Int = 0, gc: String = "Parallel",
-                   extraJvm: Seq[String] = Nil): String =
-    BenchFork.fork(mainClass, cpus, args, heapGb, gc, extraJvm)
+                   heapGb: Int = 0, gc: String = "Parallel"): String = {
+    val javaBin = s"${System.getProperty("java.home")}/bin/java"
+    val addOpens = Seq(
+      "java.base/java.lang", "java.base/java.lang.invoke",
+      "java.base/java.lang.reflect", "java.base/java.io",
+      "java.base/java.net", "java.base/java.nio",
+      "java.base/java.util", "java.base/java.util.concurrent",
+      "java.base/java.util.concurrent.atomic",
+      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
+      "java.base/sun.security.action", "java.base/sun.util.calendar"
+    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
+    // pin to the TOP cpus cores: OS interrupt handling and the (mostly
+    // pipe-blocked, unpinned) parent JVM concentrate on the low cores, and
+    // that noise taxes a 2-core arm 4× harder per core than an 8-core arm
+    // — inflating the measured low-arm time and with it the efficiency
+    // ratio. Top-pinning removes the shared-core bias from both arms; a
+    // full-machine (32-core) child necessarily still includes core 0.
+    val total = Runtime.getRuntime.availableProcessors
+    val pin =
+      if (new java.io.File("/usr/bin/taskset").exists())
+        Seq("/usr/bin/taskset", "-c", s"${math.max(0, total - cpus)}-${total - 1}")
+      else Seq.empty
+    val heap = if (heapGb > 0) heapGb else 2 * cpus
+    val cmd = pin ++ Seq(javaBin) ++ addOpens ++ Seq(
+      s"-Xmx${heap}g", s"-XX:+Use${gc}GC", s"-XX:ActiveProcessorCount=$cpus",
+      "-cp", System.getProperty("java.class.path"),
+      mainClass) ++ args
+    // merge stderr into the read pipe: the result-line regexes tolerate
+    // the surrounding log noise, and an undrained stderr pipe (>64KB of
+    // Spark warnings) would block the child and deadlock the bench
+    val out = new StringBuilder
+    val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
+    val reader = new java.io.BufferedReader(
+      new java.io.InputStreamReader(proc.getInputStream))
+    var line = reader.readLine()
+    while (line != null) { out.append(line).append('\n'); line = reader.readLine() }
+    proc.waitFor()
+    out.toString
+  }
 
   /** One scaling measurement in an ISOLATED, core-pinned child JVM (see
     * ScaleRunner). Returns (build sec, query sec, p50 sec). */
@@ -167,9 +208,6 @@ ${w.postingsFull.toDouble / math.max(1, w.postingsWand)}%.1f× fewer postings; w
 ${if (w.tWand < w.tFull) f"win ${w.tFull / w.tWand}%.1f×" else f"LOSS ${w.tWand / w.tFull}%.1f× (pruning pays in decode volume, not wall, at this scale)"}.
 """
   }
-
-  private def deleteRecursively(path: String): Unit =
-    BenchFork.deleteRecursively(path)
 
   /** Headline estimator: min build time per ARM across every fork of that
     * arm (3 forks × min-of-7 builds = min of 21). Each fork's min-of-7
@@ -351,7 +389,7 @@ ${if (w.tWand < w.tFull) f"win ${w.tFull / w.tWand}%.1f×" else f"LOSS ${w.tWand
         (results, fixtures, pairsA, pairsB, wand, wandSkipped)
       } finally {
         // a failed child must not leak the multi-GB temp corpora
-        Seq(pagesDirA, pagesDirB).foreach(deleteRecursively)
+        Seq(pagesDirA, pagesDirB).foreach(LocalFiles.deleteRecursively)
       }
 
     val effRuns = pairsA.map(_.eff).sorted

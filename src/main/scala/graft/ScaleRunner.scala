@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-
 import graft.corpus.Synthesizer
 import graft.index.IndexBuilder
 import graft.query.Bm25Search
@@ -29,44 +27,18 @@ import graft.query.Bm25Search
   */
 object ScaleRunner {
 
-  private def deleteRecursively(path: String): Unit = {
-    import java.nio.file.{Files => F, Paths}
-    val p = Paths.get(path)
-    if (F.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      F.walk(p).iterator().asScala.toSeq.reverse.foreach(F.deleteIfExists(_))
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val cpus = args(0).toInt
     val nDocs = args(1).toLong
     val pagesDir = args(2)
-    val mult = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_MULT", "1").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-scale-$cpus")
-      .config("spark.sql.shuffle.partitions", (mult * cpus).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // local-mode shuffle never crosses a network: lz4-compressing it
-      // only spends CPU and memory-bus bandwidth (the contended resource
-      // at full machine width) to shrink writes to the page cache.
-      // Measured at 1M docs: blocks stage 24.8->20.9 s @8, 8.3->7.2 s @32.
-      // A real multi-node cluster SHOULD keep compression on for its
-      // network shuffles; this conf models a node-local NVMe shuffle,
-      // applied identically to both arms of the pair.
-      .config("spark.shuffle.compress", "false")
-      // A/B knob for the parquet OUTPUT codec (default snappy, Spark's
-      // default): the same page-cache-write argument as shuffle
-      // compression could apply to the stage writes
-      .config("spark.sql.parquet.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_PARQUET_CODEC", "snappy"))
-      // ride out long GC pauses instead of expiring the local executor
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // local-mode shuffle never crosses a network: lz4-compressing it
+    // only spends CPU and memory-bus bandwidth (the contended resource
+    // at full machine width) to shrink writes to the page cache.
+    // Measured at 1M docs: blocks stage 24.8->20.9 s @8, 8.3->7.2 s @32.
+    // A real multi-node cluster SHOULD keep compression on for its
+    // network shuffles; this conf models a node-local NVMe shuffle,
+    // applied identically to both arms of the pair.
+    val spark = Bench.session(cpus, "spark.shuffle.compress" -> "false")
     // warmup at 1/10 scale: enough docs that C2 fully compiles the build's
     // generated code and the heap reaches its working size BEFORE the
     // timed builds (measured: an under-warmed first build runs 2-10x slow,
@@ -123,6 +95,6 @@ object ScaleRunner {
     val p50 = lats(lats.size / 2)
     println(f"SCALE $cpus $buildSec%.3f $querySec%.3f $p50%.4f")
     spark.stop()
-    } finally dirs.foreach(deleteRecursively)
+    } finally dirs.foreach(LocalFiles.deleteRecursively)
   }
 }

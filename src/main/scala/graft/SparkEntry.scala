@@ -253,12 +253,7 @@ object SparkEntry {
   // address the same docs.
   private val entryTmpRoot: java.nio.file.Path = {
     val p = java.nio.file.Files.createTempDirectory("graft-entry-indexes")
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(p.toFile)
-    }
+    sys.addShutdownHook(LocalFiles.deleteRecursively(p.toString))
     p
   }
   private val builtIndexCache = scala.collection.concurrent.TrieMap.empty[String, String]

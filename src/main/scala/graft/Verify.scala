@@ -24,10 +24,7 @@ object Verify {
         // previous run's parquet behind in a reused outDir — the compare
         // would silently read stale (passing) results for a now-broken
         // query; a visibly absent table fails loudly instead
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(new java.io.File(s"$outDir/$name"))
+        LocalFiles.deleteRecursively(s"$outDir/$name")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

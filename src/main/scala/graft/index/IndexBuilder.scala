@@ -110,56 +110,7 @@ object IndexBuilder {
       .drop("__bucket")
   }
 
-  /** Single-decode docId assignment for builds with NO extraction audit
-    * (the two-pass plan above re-decodes the text column once per pass to
-    * apply the row filter — measurably slower when no audit scan exists to
-    * carry pass 1): range-partition by url + sort within partitions (ONE
-    * shuffle), doc_id = per-partition offset (tiny driver-side cumsum over
-    * partition counts) + intra-partition position. The sorted Dataset is
-    * persisted so the counts job and the assignment job see identical
-    * (nondeterministically sampled) range boundaries — and a partition
-    * lost AFTER the counts job recomputes through the SAME physical plan
-    * instance, whose RangePartitioner (boundaries sampled once at plan
-    * execution) and within-partition sort are frozen, so recovered rows
-    * land in identical (pid, local) slots — MEMORY_AND_DISK_SER
-    * by default: it spills to local disk exactly when the corpus slice
-    * doesn't fit the executors' storage memory, and when it does fit it
-    * skips the disk round-trip entirely (the local disk is the one
-    * resource that does NOT grow with core count, so forcing DISK_ONLY
-    * made the docs stage the build's worst scaler — measured 0.38
-    * stage efficiency 8→32 cores, vs 0.73 for the shuffle-bound blocks
-    * stage). Returns (ids, persist handle) — the caller MUST unpersist
-    * the handle once the ids are consumed. */
-  def assignDocIdsPersisted(pages: DataFrame, partitions: Int,
-                            storage: org.apache.spark.storage.StorageLevel =
-                              org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-                           : (DataFrame, DataFrame) = {
-    val sorted = pages
-      .repartitionByRange(partitions, col("url"))
-      .sortWithinPartitions(col("url"))
-      .withColumn("mid", monotonically_increasing_id())
-      .withColumn("pid", shiftright(col("mid"), 33).cast("int"))
-      .withColumn("local", col("mid").bitwiseAND(lit((1L << 33) - 1)))
-      .persist(storage)
-    val counts = sorted.groupBy(col("pid")).count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val pids = counts.keys.toSeq.sorted
-    val offsets = pids.zip(pids.scanLeft(0L)((acc, p) => acc + counts(p)).dropRight(1)).toMap
-    val spark = pages.sparkSession
-    val offsetDf = broadcast(
-      spark.createDataFrame(offsets.toSeq.map { case (p, o) => (p, o) })
-        .toDF("pid", "offset"))
-    val ids = sorted
-      .join(offsetDf, "pid")
-      .withColumn("doc_id", col("offset") + col("local"))
-      .drop("mid", "pid", "local", "offset")
-    (ids, sorted)
-  }
-
-  /** Dense docId = global rank over url — [[planDocIds]] + [[applyDocIds]]
-    * (the leak-free two-pass form; [[build]] picks this or the persisted
-    * single-decode form depending on whether an audit scan exists to
-    * carry pass 1). */
+  /** Dense docId = global rank over url — [[planDocIds]] + [[applyDocIds]]. */
   def assignDocIds(pages: DataFrame, partitions: Int): DataFrame =
     applyDocIds(pages, planDocIds(pages, partitions))
 
@@ -239,7 +190,6 @@ object IndexBuilder {
     // the derived avgdl is identical to an aggregation over the table.
     val docsObs = org.apache.spark.sql.Observation()
     val auditObs = org.apache.spark.sql.Observation()
-    var docsPersist: Option[DataFrame] = None
     val docsReport = runStage(spark, indexDir, "docs", 0L, baseCfg,
       configAfter = () =>
         if (auditExtraction) Map("extract_mismatches" -> obsLong(auditObs, "mm").toString)
@@ -253,28 +203,13 @@ object IndexBuilder {
               .cast("long").as("__mm"))
             .observe(auditObs, sum(col("__mm")).as("mm"))
             .drop("__mm")
-      val withIds =
-        if (auditExtraction) applyDocIds(narrow, planDocIds(filtered, parts))
-        else {
-          // the two-pass plan trades a second decode of the filter
-          // columns for the persist; without an audit the single-decode
-          // persisted form is measurably cheaper (DocIdProbe @600k docs:
-          // 1.96 vs 2.20 s at 8 cores, 1.70 vs 2.68 s at 32 — the extra
-          // text re-read costs more than the narrow-row persist until
-          // the persist itself no longer fits local disk). Unpersisted
-          // right after the write.
-          val (ids, handle) = assignDocIdsPersisted(narrow, parts)
-          docsPersist = Some(handle)
-          ids
-        }
-      withIds
+      applyDocIds(narrow, planDocIds(filtered, parts))
         .select((col("doc_id") + docIdOffset).as("doc_id"),
           col("url"), col("warc_ts"), col("text"), col("lang"),
           size(Tokenizer.tokenizeDoc(col("text"))).as("dl"))
         .observe(docsObs, count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
     }
     reports += docsReport
-    docsPersist.foreach(_.unpersist(blocking = false))
     val docs = spark.read.parquet(docsDir)
 
     // -- corpusstats ------------------------------------------------------

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.LocalFiles
 import graft.catalog.TableManifest
 import graft.query.{Bm25IndexTables, Tombstones}
 
@@ -171,21 +172,13 @@ object IndexUpdater {
     val hadOld = Files.exists(dirPath)
     if (hadOld) Files.move(dirPath, aside)
     Files.move(Paths.get(tmp), dirPath)
-    if (hadOld) deleteRecursively(aside)
+    if (hadOld) LocalFiles.deleteRecursively(aside.toString)
   }
 
   /** Convenience overload for small driver-side id lists (CLI / tests). */
   def remove(spark: SparkSession, indexDir: String, docIds: Seq[Long]): Unit = {
     import spark.implicits._
     remove(spark, indexDir, docIds.toDF("doc_id"))
-  }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    if (Files.isDirectory(p)) {
-      val it = Files.list(p).iterator()
-      while (it.hasNext) deleteRecursively(it.next())
-    }
-    Files.deleteIfExists(p)
   }
 
   /** The committed tombstone set with its manifest row count — the count

@@ -33,7 +33,8 @@ package graft.train
   *    ln m = 2w·P(w²) with w = (m−1)/(m+1) ∈ [0, 1/3) and P the
   *    order-16 atanh series in Horner form (constants 1/(2j+1) as
   *    integer divisions), and ln 2 itself from the same series at
-  *    w = 1/3 — no decimal literal whose parse could differ.
+  *    w = 1/3 — no decimal literal whose parse could differ. From
+  *    z ≥ 2^21 on the normalization yields NULL, never a wrong ln.
   *
   * The generated text is dialect-neutral; callers chain the fragments
   * through named intermediates (withColumn / CTE stages) because inlining
@@ -54,6 +55,11 @@ object ExactMath {
   val LnOrder: Int = 16
   val LnKMax: Int = 20 // normalizes z < 2^21 — softmax sums are ≤ batch size
 
+  /** 2^(LnKMax+1): the first z the ln normalization cannot reach. At and
+    * above it [[lnKSql]]/[[lnMSql]] yield NULL (and [[lnExact]] NaN)
+    * instead of a silently wrong ln. */
+  val LnZLimit: Long = 1L << (LnKMax + 1)
+
   /** Clamp to [-32, 0] and scale to h = x/64 ∈ [-0.5, 0]. */
   def expReduceSql(x: String): String =
     s"((CASE WHEN ($x) < $ExpClampLo THEN $ExpClampLo ELSE ($x) END)/$ExpScale)"
@@ -67,14 +73,17 @@ object ExactMath {
   def pow4Sql(p: String): String =
     s"((($p)*($p))*(($p)*($p)))"
 
-  /** k = ⌊log₂ z⌋ for z ∈ [1, 2^(KMax+1)). */
+  /** k = ⌊log₂ z⌋ for z ∈ [1, 2^(KMax+1)); NULL from [[LnZLimit]] up. */
   def lnKSql(z: String): String =
-    (LnKMax to 1 by -1).map(j => s"WHEN ($z) >= ${1L << j} THEN $j")
+    (s"WHEN ($z) >= $LnZLimit THEN NULL" +:
+      (LnKMax to 1 by -1).map(j => s"WHEN ($z) >= ${1L << j} THEN $j"))
       .mkString("(CASE ", " ", " ELSE 0 END)")
 
-  /** m = z/2^k ∈ [1, 2) — exact (division by a power of two). */
+  /** m = z/2^k ∈ [1, 2) — exact (division by a power of two); NULL from
+    * [[LnZLimit]] up. */
   def lnMSql(z: String): String =
-    (LnKMax to 1 by -1).map(j => s"WHEN ($z) >= ${1L << j} THEN ($z)/${1L << j}")
+    (s"WHEN ($z) >= $LnZLimit THEN NULL" +:
+      (LnKMax to 1 by -1).map(j => s"WHEN ($z) >= ${1L << j} THEN ($z)/${1L << j}"))
       .mkString("(CASE ", " ", s" ELSE ($z) END)")
 
   /** P(u) = Σ_{j=0..LnOrder} u^j/(2j+1) in Horner form, so that
@@ -126,7 +135,7 @@ object ExactMath {
 
   val Ln2: Double = 2 * (1.0 / 3) * lnSeries((1.0 / 3) * (1.0 / 3))
 
-  def lnExact(z: Double): Double = {
+  def lnExact(z: Double): Double = if (z >= LnZLimit) Double.NaN else {
     var k = 0
     var m = z
     var j = LnKMax

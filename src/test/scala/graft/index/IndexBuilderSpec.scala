@@ -36,21 +36,6 @@ class IndexBuilderSpec extends AnyFunSuite {
     }
   }
 
-  test("two-pass (plan/apply) and persisted docId paths assign identical ids") {
-    // build() routes audited builds through planDocIds/applyDocIds and
-    // unaudited builds through the single-decode persisted form — resume
-    // across the two (config-equal manifests) requires id identity
-    Seq(2, 7).foreach { parts =>
-      val viaPlan = IndexBuilder.assignDocIds(pages, parts)
-        .select(col("url"), col("doc_id")).as[(String, Long)].collect().sorted.toSeq
-      val (ids, handle) = IndexBuilder.assignDocIdsPersisted(pages, parts)
-      val viaPersist = ids
-        .select(col("url"), col("doc_id")).as[(String, Long)].collect().sorted.toSeq
-      handle.unpersist()
-      assert(viaPlan == viaPersist, s"parts=$parts: the two docId paths diverge")
-    }
-  }
-
   test("fused block-encode aggregate ≡ collect_list + encode expression (row-identical)") {
     // the persisted build runs blocksAgg (primitive-array buffers, varint
     // partial serialization); the lazy in-memory path runs blocks

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestSession
+import graft.{LocalFiles, SparkTestSession}
 import graft.corpus.Synthesizer
 
 /** Training-data pipeline operators: planted duplicates must be found by
@@ -126,12 +126,13 @@ class PipelineSpec extends AnyFunSuite {
       assert(reliable == local)
       assert((0L to 63L).forall(reliable(_) == 0L))
     } finally {
-      // results are collected; reclaim the checkpoint files (the dir
-      // setting itself stays — SparkContext has no public unset)
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(dir))
+      // results are collected; reclaim the checkpoint files. SparkContext
+      // has no public unset, so the setting stays: leave the directory it
+      // points at (a uuid child of `dir`) existing and empty, so a later
+      // checkpoint in this JVM never finds a deleted path
+      val ckpt = new java.net.URI(spark.sparkContext.getCheckpointDir.get)
+      LocalFiles.deleteRecursively(dir)
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(ckpt))
     }
   }
 
@@ -376,12 +377,7 @@ class PipelineSpec extends AnyFunSuite {
       // the manifests commit atomically — a partial write must not open
       val bad = java.nio.file.Files.createTempDirectory("graft-ivf-bad").toString
       assertThrows[IllegalArgumentException](Similarity.openIvf(spark, bad))
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(dir))
-    }
+    } finally LocalFiles.deleteRecursively(dir)
   }
 
   test("embedding near-dups: every emitted pair verifies against local cosine") {

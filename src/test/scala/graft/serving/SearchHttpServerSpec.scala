@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestSession
+import graft.{LocalFiles, SparkTestSession}
 import graft.corpus.Synthesizer
 import graft.index.IndexBuilder
 import graft.query.SearchSession
@@ -101,10 +101,7 @@ class SearchHttpServerSpec extends AnyFunSuite {
       // next uncached query fails inside Spark with the missing path in
       // its message
       session.close()
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(dir))
+      LocalFiles.deleteRecursively(dir)
       val (status, body) = get(s"http://127.0.0.1:${server.port}/api/search?query=w7&k=3")
       assert(status == 500)
       assert(body == """{"error":"internal error"}""", body)
